@@ -44,7 +44,12 @@ private[queries] trait ScaleBase {
     * partition layout / core count (the r15 docs_clean_pipeline hash
     * regression). Integer arithmetic is order-free: the same value at
     * any core count, and bit-identical to the DuckDB oracle's mirror
-    * expression. Only for columns the driver hash-gates. */
+    * expression. Only for columns the driver hash-gates.
+    *
+    * Precondition: Σmicro ≥ 0 (and `n` counts exactly the summed
+    * values). Spark `DIV` truncates toward zero while DuckDB `//`
+    * floors, so on a negative sum the two engines disagree and the
+    * half-up identity fails. */
   protected def microMean6(sumMicroCol: String, nCol: String): org.apache.spark.sql.Column =
     expr(s"CAST((2 * $sumMicroCol + $nCol) DIV (2 * $nCol) AS DOUBLE) / 1000000.0")
 }

@@ -345,8 +345,9 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * scoring); `recall_ok` — pair recall ≥ 0.8 on the sampled pair
     * domain (full-corpus recall measured with probes=3 at the derived
     * k: 1.000/1.000/0.965 at sf0.001/0.01/0.1 (k=8) and 0.820 at the
-    * 20k-vector sf1 soak (k=16) — SemDedupProbe); `drop_sound` —
-    * every dropped doc is a vertex of some found pair; `partition_ok`
+    * 20k-vector sf1 soak (k=16) — TODO.md; `RecallProbe` re-measures
+    * it); `drop_sound` — every dropped doc is a vertex of some found
+    * pair; `partition_ok`
     * — kept + dropped = corpus (both FULL-corpus). The exact twin is
     * capped to a ~1000-vertex deterministic id-hash sample so the
     * certification pays O(cap²), not O(n²) — the sampled exact pair
@@ -360,7 +361,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     // UNCLAMPED above, with the KMeans fit sample-bounded and cell
     // routing two-level — see semDedupDerivedK). The
     // ~1250-vectors/cell target is the τ = 0.4 recall floor:
-    // SemDedupProbe at the sf1 soak measured recall 0.820/0.668/0.530
+    // the sf1 soak measured recall 0.820/0.668/0.530 (TODO.md)
     // at k = 16/32/64 — 66°-apart "duplicates" simply straddle fine
     // clusters, so a low threshold caps how small cells may get
     // (recall ≥ 0.8 ⇒ cells ≥ ~1250). The CANDIDATE VOLUME is thus
@@ -370,7 +371,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     // self-join, candidates die in-stage, a-side sliced for
     // parallelism) took the sf1 soak row 121.2 → 10.2 s and the
     // sf1/sf0.1 ratio 16.7× → ~3× with a BIT-IDENTICAL pair set
-    // (SemDedupProbe re-pinned 0.965/0.820). At high τ — SemDeDup's
+    // (recall re-pinned 0.965/0.820, TODO.md). At high τ — SemDeDup's
     // design regime — fine cells keep recall (SimilaritySpec pins
     // ≥ 0.9 planted-pair recall at τ = 0.9 with k = 80 two-level
     // cells), so the unclamped rule scales sub-quadratically exactly

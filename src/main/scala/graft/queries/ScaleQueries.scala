@@ -37,16 +37,21 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     // The three averaged columns are per-row round(…, 6) grid values:
     // exact micro-unit accumulation (see ScaleBase.microMean6) instead
     // of round(avg(double)) so the result cannot depend on float
-    // summation order (= partition layout / core count).
+    // summation order (= partition layout / core count). Each mean
+    // divides by its own non-null count, as avg() would: an empty doc
+    // has no alpha_ratio or quality and must not deflate them.
     withCols.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum(micro6(col("alpha_ratio"))).as("_sa"),
+      count(col("alpha_ratio")).as("_na"),
       sum(micro6(col("stopword_ratio"))).as("_ss"),
-      sum(micro6(col("quality"))).as("_sq"))
+      count(col("stopword_ratio")).as("_ns"),
+      sum(micro6(col("quality"))).as("_sq"),
+      count(col("quality")).as("_nq"))
       .select(col("source"), col("n_docs"),
-        microMean6("_sa", "n_docs").as("avg_alpha"),
-        microMean6("_ss", "n_docs").as("avg_stopword"),
-        microMean6("_sq", "n_docs").as("avg_quality"))
+        microMean6("_sa", "_na").as("avg_alpha"),
+        microMean6("_ss", "_ns").as("avg_stopword"),
+        microMean6("_sq", "_nq").as("avg_quality"))
   }
 
   val textQualityOracle: String = {
@@ -71,12 +76,12 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
        |      LEAST(1.0, stopword_ratio * 5.0) * 0.3, 6) AS quality
        |  FROM r)
        |SELECT source, COUNT(*) AS n_docs,
-       |  CAST((2 * SUM(CAST(ROUND(alpha_ratio * 1000000.0, 0) AS BIGINT)) + COUNT(*))
-       |    // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS avg_alpha,
-       |  CAST((2 * SUM(CAST(ROUND(stopword_ratio * 1000000.0, 0) AS BIGINT)) + COUNT(*))
-       |    // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS avg_stopword,
-       |  CAST((2 * SUM(CAST(ROUND(quality * 1000000.0, 0) AS BIGINT)) + COUNT(*))
-       |    // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS avg_quality
+       |  CAST((2 * SUM(CAST(ROUND(alpha_ratio * 1000000.0, 0) AS BIGINT)) + COUNT(alpha_ratio))
+       |    // (2 * COUNT(alpha_ratio)) AS DOUBLE) / 1000000.0 AS avg_alpha,
+       |  CAST((2 * SUM(CAST(ROUND(stopword_ratio * 1000000.0, 0) AS BIGINT)) + COUNT(stopword_ratio))
+       |    // (2 * COUNT(stopword_ratio)) AS DOUBLE) / 1000000.0 AS avg_stopword,
+       |  CAST((2 * SUM(CAST(ROUND(quality * 1000000.0, 0) AS BIGINT)) + COUNT(quality))
+       |    // (2 * COUNT(quality)) AS DOUBLE) / 1000000.0 AS avg_quality
        |FROM s GROUP BY source""".stripMargin
   }
 
@@ -851,6 +856,8 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     // — the r15 regression was THIS column's 6th decimal flipping with
     // the float-summation order once tw's widen put defaultParallelism
     // into the plan (gate data has exact half-ties by construction).
+    // The quality >= 0.5 filter above drops null-quality (empty) docs,
+    // so count(*) here IS quality's non-null count (unlike text_quality).
     docs.join(keep, Seq("fp", "doc_id"), "left_semi")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),

@@ -1,7 +1,11 @@
 package graft.tools
 
 import graft.Sessions
-import graft.queries.Registry
+import graft.queries.{Q, Registry}
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 
 /** Warm per-query benchmark artifact: every registered query runs
   * `reps` times in one session; rep 1 is the cold number (parquet
@@ -12,9 +16,15 @@ import graft.queries.Registry
   *
   * `runMain graft.tools.BenchWarm [sfDir] [outPath] [reps] [only]` —
   * writes one JSON object: {"sf":…, "reps":…, "queries": {name:
-  * {"cold":…, "warm":…}}, "warm_total":…}. `only` is an optional
-  * comma-separated query-name filter for targeted probes (the ML
-  * drift A/B, a single-operator iteration loop).
+  * {"cold":…, "warm":…, "jobs":…, "stages":…, "tasks":…}},
+  * "warm_total":…}; the counts are the warm rep's Spark jobs,
+  * completed stages and finished tasks. `only` is an optional
+  * comma-separated query-name filter for targeted probes (solo
+  * re-timing, the ML drift A/B, a single-operator iteration loop);
+  * with it every rep also prints its jobs grouped by callsite and
+  * its heaviest stages — the "which internal action dominates this
+  * row" question the total can't answer (the UI is disabled in the
+  * harness, so this is the stage page in text form).
   */
 object BenchWarm {
 
@@ -45,6 +55,110 @@ object BenchWarm {
   private val RefCanaryCpuParSec = 0.500
   private val VectorRowsRegex = "^(knn_|emb_|dedup_embedding|dedup_semantic)"
 
+  /** Spark jobs, stages and tasks of one rep; attached for that rep
+    * only. The bus delivers a listener's events on one thread, and
+    * readers look only after [[ListenerBus.drain]], so no locking. */
+  final class RepTrace extends SparkListener {
+    private val started = mutable.Map[Int, (String, Long)]()
+    /** (callsite, ms) per finished job. */
+    val jobMs = mutable.ArrayBuffer[(String, Long)]()
+    /** (name, ms, tasks) per completed stage. */
+    val stageMs = mutable.ArrayBuffer[(String, Long, Int)]()
+    var tasks = 0L
+    def jobs: Int = started.size
+    def stages: Int = stageMs.size
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      // the result stage (the job's last) is named after its callsite
+      val site = e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
+      started(e.jobId) = (site, e.time)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      started.get(e.jobId).foreach { case (site, t0) => jobMs += site -> (e.time - t0) }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val i = e.stageInfo
+      val ms = (for (a <- i.completionTime; b <- i.submissionTime) yield a - b).getOrElse(0L)
+      stageMs += ((i.name.take(90), ms, i.numTasks))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks += 1
+  }
+
+  /** One rep: `sec` is the query's wall time, or the time to fail when
+    * `failure` is set — a failed rep is never a result. */
+  final case class Rep(sec: Double, failure: Option[String], trace: RepTrace)
+
+  /** Time one rep of `q` through the noop sink, with a fresh
+    * [[RepTrace]] attached for the rep and removed after it. */
+  def runRep(spark: SparkSession, q: Q, sfDir: String): Rep = {
+    val sc = spark.sparkContext
+    val trace = new RepTrace
+    val t0 = System.nanoTime()
+    try {
+      // everything INSIDE the try: on a dead SparkContext these throw
+      // too, and the harness must still write its partial artifact.
+      sc.addSparkListener(trace)
+      // clean block manager per rep: un-released localCheckpoint
+      // blocks from prior reps/queries inflate later timings (the
+      // r4 warm>cold inversion on dedup_embedding_lsh was exactly
+      // this — isolated reps converge to 2.3 s, below cold).
+      Sessions.releaseResidue(spark, blocking = true)
+      System.gc() // prior rep's garbage collected outside the timing window
+      val t1 = System.nanoTime()
+      q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Rep((System.nanoTime() - t1) / 1e9, None, trace)
+    } catch {
+      case e: Throwable =>
+        Rep((System.nanoTime() - t0) / 1e9, Some(e.toString.linesIterator.next()), trace)
+    } finally {
+      try ListenerBus.drain(sc) finally sc.removeSparkListener(trace)
+    }
+  }
+
+  /** A rep's jobs grouped by callsite, then its heaviest stages. */
+  private def printProfile(name: String, i: Int, r: Rep): Unit = {
+    val t = r.trace
+    println(f"PROFILE $name rep$i total ${r.sec}%.2f s, ${t.jobs} jobs, " +
+      s"${t.stages} stages, ${t.tasks} tasks")
+    t.jobMs.groupBy(_._1).map { case (site, js) => (site, js.map(_._2).sum, js.size) }
+      .toSeq.sortBy(-_._2).take(15).foreach { case (site, ms, n) =>
+        println(f"  JOBS   ${ms / 1e3}%7.2f s  n=$n%-4d $site")
+      }
+    t.stageMs.sortBy(-_._2).take(12).foreach { case (stage, ms, tasks) =>
+      println(f"  STAGE  ${ms / 1e3}%7.2f s  tasks=$tasks%-4d $stage")
+    }
+  }
+
+  /** One canary axis' index against its reference. A failed probe
+    * reports a negative sentinel ([[HostCanary.cpuPar]]); its index
+    * is None, never a number a `max` could quietly mask. */
+  def canaryIndex(sec: Double, refSec: Double): Option[Double] =
+    if (sec > 0) Some(sec / refSec) else None
+
+  /** The blended cpu + scan index `normalized_total` divides by. */
+  private def hostIndex(cpuSec: Double, scanSec: Double): Double =
+    (cpuSec + scanSec) / (RefCanaryCpuSec + RefCanaryScanSec)
+
+  private def num(x: Option[Double]): String = x.fold("null")(v => f"$v%.3f")
+
+  /** The artifact's canary block, from the raw probe seconds. */
+  def canaryJson(cpuSec: Double, cpuParSec: Double, vecSec: Double,
+                 scanSec: Double, scanFirstSec: Double): String = {
+    val cpuParIndex = canaryIndex(cpuParSec, RefCanaryCpuParSec)
+    f"""  "canary": {"cpu_sec": $cpuSec%.3f, "cpu_par_sec": ${num(cpuParIndex.map(_ => cpuParSec))}, "vec_sec": $vecSec%.3f, "scan_sec": $scanSec%.3f, "scan_first_sec": $scanFirstSec%.3f},
+       |  "canary_ref": {"cpu_sec": $RefCanaryCpuSec%.3f, "scan_sec": $RefCanaryScanSec%.3f, "vec_sec": $RefCanaryVecSec%.3f, "cpu_par_sec": $RefCanaryCpuParSec%.3f},
+       |  "host_index": ${hostIndex(cpuSec, scanSec)}%.3f,
+       |  "vec_index": ${vecSec / RefCanaryVecSec}%.3f,
+       |  "cpu_par_index": ${num(cpuParIndex)},
+       |  "normalization": {
+       |    "usable": ${cpuParIndex.isDefined},
+       |    "vector_rows_regex": "$VectorRowsRegex",
+       |    "rule": "comparable_warm(row) = warm / index(row); index(row) = max(vec_index, cpu_par_index) if row name matches vector_rows_regex else host_index; cross-round verdict: ratio = comparable_warm_now / comparable_warm_prev, adjudicate only rows with |ratio - 1| > 0.30 AND a src/main diff touching their code path; otherwise record as host drift with the two index values; usable = false (a canary probe failed this sitting): do not normalize against this sitting"
+       |  },""".stripMargin
+  }
+
+  private final case class Row(name: String, cold: Double, warm: Double,
+                               jobs: Int, stages: Int, tasks: Long, failed: Boolean)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) args(1) else "BENCH_WARM.json"
@@ -66,60 +180,37 @@ object BenchWarm {
         // a prior query killed the context (e.g. driver OOM): every
         // further run would time a fast failure — skip, keep partials
         println(s"BENCHWARM ${q.name} SKIPPED: SparkContext stopped")
-        (q.name, 0.0, 0.0, true)
+        Row(q.name, 0.0, 0.0, 0, 0, 0L, failed = true)
       } else {
-      var failed = false
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try {
-          // clean block manager per rep: un-released localCheckpoint
-          // blocks from prior reps/queries inflate later timings (the
-          // r4 warm>cold inversion on dedup_embedding_lsh was exactly
-          // this — isolated reps converge to 2.3 s, below cold).
-          // INSIDE the try: on a dead SparkContext this throws too,
-          // and the harness must still write its partial artifact.
-          Sessions.releaseResidue(spark, blocking = true)
-          System.gc() // prior rep's garbage collected outside the timing window
-          val t1 = System.nanoTime()
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t1) / 1e9
-        } catch {
-          case e: Throwable =>
-            failed = true
-            println(s"BENCHWARM ${q.name} FAILED: ${e.toString.linesIterator.next()}")
-            (System.nanoTime() - t0) / 1e9
+        val runs = (1 to reps).map { i =>
+          val r = runRep(spark, q, sfDir)
+          r.failure.foreach(f => println(s"BENCHWARM ${q.name} FAILED: $f"))
+          if (only.isDefined) printProfile(q.name, i, r)
+          r
         }
-      }
-      println(f"BENCHWARM ${q.name}%-28s cold=${times.head}%6.2f " +
-        f"warm=${times.tail.min}%6.2f${if (failed) " FAILED" else ""}")
-      (q.name, times.head, times.tail.min, failed)
+        val warm = runs.tail.minBy(_.sec)
+        val failed = runs.exists(_.failure.isDefined)
+        println(f"BENCHWARM ${q.name}%-28s cold=${runs.head.sec}%6.2f " +
+          f"warm=${warm.sec}%6.2f jobs=${warm.trace.jobs}%-4d " +
+          f"stages=${warm.trace.stages}%-4d tasks=${warm.trace.tasks}" +
+          (if (failed) " FAILED" else ""))
+        Row(q.name, runs.head.sec, warm.sec, warm.trace.jobs,
+          warm.trace.stages, warm.trace.tasks, failed)
       }
     }
-    val qjson = results.map { case (n, cold, warm, failed) =>
-      val flag = if (failed) """, "failed": true""" else ""
-      f"""    "$n": {"cold": $cold%.3f, "warm": $warm%.3f$flag}"""
+    val qjson = results.map { r =>
+      val flag = if (r.failed) """, "failed": true""" else ""
+      f"""    "${r.name}": {"cold": ${r.cold}%.3f, "warm": ${r.warm}%.3f, "jobs": ${r.jobs}, "stages": ${r.stages}, "tasks": ${r.tasks}$flag}"""
     }.mkString(",\n")
     // failed reps time the failure, not the query — keep them out of
     // the headline total
-    val total = results.collect { case (_, _, warm, false) => warm }.sum
-    val hostIndex = (canaryCpuSec + canaryScanSec) /
-      (RefCanaryCpuSec + RefCanaryScanSec)
-    val vecIndex = canaryVecSec / RefCanaryVecSec
-    val cpuParIndex = canaryCpuParSec / RefCanaryCpuParSec
+    val total = results.filterNot(_.failed).map(_.warm).sum
     val json =
       f"""{
          |  "sf": "$sfDir",
          |  "reps": $reps,
-         |  "canary": {"cpu_sec": $canaryCpuSec%.3f, "cpu_par_sec": $canaryCpuParSec%.3f, "vec_sec": $canaryVecSec%.3f, "scan_sec": $canaryScanSec%.3f, "scan_first_sec": $canaryScanFirstSec%.3f},
-         |  "canary_ref": {"cpu_sec": $RefCanaryCpuSec%.3f, "scan_sec": $RefCanaryScanSec%.3f, "vec_sec": $RefCanaryVecSec%.3f, "cpu_par_sec": $RefCanaryCpuParSec%.3f},
-         |  "host_index": $hostIndex%.3f,
-         |  "vec_index": $vecIndex%.3f,
-         |  "cpu_par_index": $cpuParIndex%.3f,
-         |  "normalization": {
-         |    "vector_rows_regex": "$VectorRowsRegex",
-         |    "rule": "comparable_warm(row) = warm / index(row); index(row) = max(vec_index, cpu_par_index) if row name matches vector_rows_regex else host_index; cross-round verdict: ratio = comparable_warm_now / comparable_warm_prev, adjudicate only rows with |ratio - 1| > 0.30 AND a src/main diff touching their code path; otherwise record as host drift with the two index values"
-         |  },
-         |  "normalized_total": ${total / hostIndex}%.3f,
+         |${canaryJson(canaryCpuSec, canaryCpuParSec, canaryVecSec, canaryScanSec, canaryScanFirstSec)}
+         |  "normalized_total": ${total / hostIndex(canaryCpuSec, canaryScanSec)}%.3f,
          |  "warm_total": $total%.3f,
          |  "queries": {
          |$qjson
