@@ -14,11 +14,12 @@ import graft.queries.{Q, Registry}
   *     before its timed rep — parquet footer reads, codegen, and JIT
   *     land outside the timing window, which is what a steady-state
   *     cluster measurement means.
-  *  2. `Sessions.releaseResidue` runs between reps and between
-  *     queries: `localCheckpoint` blocks are never unpersisted by the
-  *     queries themselves, and 100+ queries of pinned blocks in one
-  *     JVM crowd unified memory until later queries spill (m3 read
-  *     28 s in the r4 gate vs 6.1 s measured clean).
+  *  2. `Sessions.releaseResidue` runs before every rep
+  *     (`BenchWarm.runRep`): `localCheckpoint` blocks are never
+  *     unpersisted by the queries themselves, and 100+ queries of
+  *     pinned blocks in one JVM crowd unified memory until later
+  *     queries spill (m3 read 28 s in the r4 gate vs 6.1 s measured
+  *     clean).
   *  3. Queries run in deterministic Registry order (the Map iteration
   *     order the old bench used was hash-driven).
   *  4. Values print with 3 decimals — the r4 line carried
@@ -42,8 +43,19 @@ object Bench {
     val (canaryScanFirstSec, canaryScanSec) =
       graft.tools.HostCanary.scanBoth(spark, sfDir)
 
-    def run(q: Q): Unit =
-      q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+    // every rep goes through BenchWarm.runRep (release → GC → noop
+    // sink); a failed rep prints one stderr line and its query is
+    // listed under "failed" in BENCH_SELF.json — its time still
+    // counts in `total`, so a failure never hides as a missing row
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def rep(q: Q, dir: String, what: String): Double = {
+      val r = graft.tools.BenchWarm.runRep(spark, q, dir)
+      r.failure.foreach { f =>
+        System.err.println(s"BENCH ${q.name} FAILED ($what rep): $f")
+        failed += q.name
+      }
+      r.sec
+    }
 
     // benchSkip: correctness-gate-only certification queries (the
     // full-grid AutoML protocol run takes minutes of deliberate
@@ -54,28 +66,18 @@ object Bench {
     // JVM/codegen warmup on the smallest SF so steady-state throughput
     // is what gets measured, not JIT compilation of query 1.
     val warmDir = "/root/testdata/sf0.001"
-    timed.foreach { q =>
-      try q.run(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    Sessions.releaseResidue(spark, blocking = true)
-    System.gc()
+    timed.foreach(q => rep(q, warmDir, "jvm warm-up"))
 
+    // per query: an untimed warm-up rep at the TARGET SF, then the
+    // timed rep. runRep starts each rep from a clean slate: blocking
+    // unpersist so block removal can't overlap the timed rep, and an
+    // explicit GC so the warm-up rep's garbage is paid for OUTSIDE the
+    // timing window (an allocation-heavy query otherwise absorbs the
+    // major GC its predecessor earned — profile_lineitem read 2.5× its
+    // isolated warm time this way)
     val results = timed.map { q =>
-      // untimed warm-up rep at the TARGET SF, then a clean slate:
-      // blocking unpersist so block removal can't overlap the timed
-      // rep, and an explicit GC so the warm-up rep's garbage is paid
-      // for OUTSIDE the timing window (an allocation-heavy query
-      // otherwise absorbs the major GC its predecessor earned —
-      // profile_lineitem read 2.5× its isolated warm time this way)
-      try run(q) catch { case _: Throwable => () }
-      Sessions.releaseResidue(spark, blocking = true)
-      System.gc()
-      val t0 = System.nanoTime()
-      try run(q) catch { case _: Throwable => () }
-      val sec = (System.nanoTime() - t0) / 1e9
-      Sessions.releaseResidue(spark, blocking = true)
-      q.name -> sec
+      rep(q, sfDir, "warm-up")
+      q.name -> rep(q, sfDir, "timed")
     }
     val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }
       .mkString("{", ",", "}")
@@ -83,8 +85,9 @@ object Bench {
     val skippedJson = skipped.map("\"" + _.name + "\"").mkString("[", ",", "]")
     val canaryJson =
       f"""{"cpu_sec":$canaryCpuSec%.3f,"cpu_par_sec":$canaryCpuParSec%.3f,"vec_sec":$canaryVecSec%.3f,"scan_sec":$canaryScanSec%.3f,"scan_first_sec":$canaryScanFirstSec%.3f}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","canary":$canaryJson,"queries":$qs,"skipped":$skippedJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","canary":$canaryJson,"queries":$qs,"skipped":$skippedJson,"failed":$failedJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_SELF.json"), full.getBytes("UTF-8"))
     // The line the driver parses must be COMPACT: the full 215-query

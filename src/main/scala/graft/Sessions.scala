@@ -58,6 +58,10 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
+      // events.parquet stores ts as TIMESTAMP(NANOS), which Spark 4
+      // rejects unless read as a long (Tables.load rebuilds µs ts);
+      // set once here so no query writes it to the shared session
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // TypedImperativeAggregate (KLL/CMS/HLL/reservoir/top-k) runs
       // in ObjectHashAggregateExec, whose in-memory group cap
       // defaults to 128 — the 129th distinct key per partition

@@ -37,12 +37,6 @@ object Cleaning {
     (df.drop(existing: _*), existing)
   }
 
-  /** P3 — ordered projection. Order matters: it defines vector slot
-    * order for scaler/model and the importance/name zip (reference
-    * data_analysis.py:145,159,186). */
-  def project(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(cols.map(col): _*)
-
   /** P4 — feature list = all columns except label (+ optionally the
     * time-series bookkeeping columns) (reference
     * data_analysis.py:84,99,144,157 and :58). */

@@ -42,17 +42,4 @@ object Salting {
       .groupBy(keys.map(col): _*)
       .agg(aggs.head.merge(), aggs.tail.map(_.merge()): _*)
   }
-
-  /** Salted broadcast-side replication for skewed join keys: explode
-    * the small side `saltBuckets`× with a salt column, salt the big
-    * side by hash, join on (key, salt). Keeps one hot key from
-    * pinning a single task when the small side can't broadcast. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 saltBuckets: Int = 16): DataFrame = {
-    val bigSalted = big.withColumn("__salt",
-      pmod(xxhash64(big.columns.toIndexedSeq.map(col): _*), lit(saltBuckets)))
-    val smallExploded = small.withColumn("__salt",
-      explode(sequence(lit(0L), lit(saltBuckets.toLong - 1))))
-    bigSalted.join(smallExploded, Seq(key, "__salt")).drop("__salt")
-  }
 }

@@ -31,18 +31,35 @@ object ZOrder {
   def zValue(x: Column, y: Column): Column =
     spread16(x).bitwiseOR(shiftleft(spread16(y), 1))
 
-  /** Cluster a DataFrame by the z-value of two key columns:
-    * range-partition on z (so partitions own disjoint z-ranges →
-    * disjoint file-level min/max windows) and sort within each
+  /** Z-order key of two columns quantized against caller-supplied
+    * bounds: each column maps to a 16-bit rank in [0, 65535] (values
+    * outside the bounds clamp to the ends), then [[zValue]]
+    * interleaves the ranks. Use it where the keys are not already
+    * small non-negative integers, e.g. doubles on a known range. */
+  def zorderKey(c1: Column, c2: Column,
+                lo1: Double, hi1: Double,
+                lo2: Double, hi2: Double): Column = {
+    require(hi1 > lo1 && hi2 > lo2,
+      s"zorder bounds must be non-degenerate: [$lo1,$hi1] x [$lo2,$hi2]")
+    def quant(c: Column, lo: Double, hi: Double): Column =
+      least(greatest(
+        ((c.cast("double") - lit(lo)) / lit(hi - lo) * lit(65535.0))
+          .cast("long"), lit(0L)), lit(65535L))
+    zValue(quant(c1, lo1, hi1), quant(c2, lo2, hi2))
+  }
+
+  /** Cluster a DataFrame by a z-key (e.g. [[zValue]] or [[zorderKey]]):
+    * range-partition on the key (so partitions own disjoint z-ranges
+    * → disjoint file-level min/max windows) and sort within each
     * partition (so row groups inside a file are tight too). This is
     * exactly the two-level layout parquet scan pruning consumes.
     * Returns the input schema unchanged: the z helper column lives
     * under a collision-proof name and is dropped after the sort (a
     * projection — partitioning and intra-partition order survive). */
-  def clusterBy(df: DataFrame, xCol: String, yCol: String,
+  def clusterBy(df: DataFrame, zKey: Column,
                 numPartitions: Int): DataFrame = {
     val zc = "__graft_zorder_" + java.util.UUID.randomUUID.toString.take(8)
-    df.withColumn(zc, zValue(col(xCol), col(yCol)))
+    df.withColumn(zc, zKey)
       .repartitionByRange(numPartitions, col(zc))
       .sortWithinPartitions(zc)
       .drop(zc)

@@ -23,9 +23,6 @@ import QUtil._
   */
 object AnalyticsQueries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame =
-    Tables.load(s, d, n)
-
   private val usExpr = "epoch_us(CAST(ts AS TIMESTAMP))"
 
   // ---- funnel conversion (view -> click -> purchase) -------------------
@@ -38,7 +35,7 @@ object AnalyticsQueries {
     * under AQE, no window over the raw stream. Scales as three
     * filtered passes at any corpus size. */
   def funnelSteps(s: SparkSession, d: String): DataFrame = {
-    val ev = t(s, d, "events")
+    val ev = Tables.load(s, d, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_type"))
     val v = ev.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min("us").as("t1"))
@@ -87,7 +84,7 @@ object AnalyticsQueries {
   def funnelWindowed(s: SparkSession, d: String): DataFrame = {
     val clickUs = 24L * 3600 * 1000000
     val purchaseUs = 72L * 3600 * 1000000
-    val ev = t(s, d, "events")
+    val ev = Tables.load(s, d, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_type"))
     val v = ev.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min("us").as("t1"))
@@ -176,7 +173,7 @@ object AnalyticsQueries {
     * aggregation + one join + one distinct count — two shuffles on
     * user_id (co-partitioned) and one on the output key. */
   def retentionCohorts(s: SparkSession, d: String): DataFrame = {
-    val days = t(s, d, "events")
+    val days = Tables.load(s, d, "events")
       .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("day"))
     val first = days.groupBy("user_id").agg(min("day").as("day0"))
     days.join(first, "user_id")
@@ -209,7 +206,7 @@ object AnalyticsQueries {
     * large-sample 1.358·sqrt((n1+n2)/(n1·n2)) line; the decision bit
     * is computed on unrounded doubles identically in both engines. */
   def ksTest(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").filter(col("l_returnflag").isin("R", "A"))
+    val li = Tables.load(s, d, "lineitem").filter(col("l_returnflag").isin("R", "A"))
     val g = li.groupBy(col("l_quantity").as("v")).agg(
       sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("c1"),
       sum(when(col("l_returnflag") === "A", 1L).otherwise(0L)).as("c2"))
@@ -265,7 +262,7 @@ object AnalyticsQueries {
     * reduction is order-free. Marginals are tiny aggregate frames —
     * everything after the first groupBy is broadcast-sized. */
   def chi2Independence(s: SparkSession, d: String): DataFrame = {
-    val cell = t(s, d, "orders")
+    val cell = Tables.load(s, d, "orders")
       .groupBy("o_orderstatus", "o_orderpriority").agg(count(lit(1)).as("obs"))
       .localCheckpoint(false) // feeds marginals and the grid join
     val rowt = cell.groupBy("o_orderstatus").agg(sum("obs").as("rt"))
@@ -329,7 +326,7 @@ object AnalyticsQueries {
     * series (fewer than 3 pairs or zero variance in the lag) are
     * filtered on the unrounded denominator — same bits, same rows. */
   def ar1Forecast(s: SparkSession, d: String): DataFrame = {
-    val ev = t(s, d, "events").filter(col("value").isNotNull)
+    val ev = Tables.load(s, d, "events").filter(col("value").isNotNull)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("value"))
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
@@ -393,7 +390,7 @@ object AnalyticsQueries {
     * global window runs over day cardinality — bounded by the time
     * range, not the row count. */
   def seasonalDow(s: SparkSession, d: String): DataFrame = {
-    val daily = t(s, d, "events").filter(col("value").isNotNull)
+    val daily = Tables.load(s, d, "events").filter(col("value").isNotNull)
       .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
       .agg(sum(col("value").cast(DecimalType(18, 6))).as("sd"))
     val w = Window.orderBy("day").rowsBetween(-3, 3)
@@ -436,7 +433,7 @@ object AnalyticsQueries {
     * sequence-modeling summary a behavioral pipeline starts from; one
     * window shuffle + one small aggregation at any scale. */
   def markovTransitions(s: SparkSession, d: String): DataFrame = {
-    val ev = t(s, d, "events").select(col("user_id"),
+    val ev = Tables.load(s, d, "events").select(col("user_id"),
       unix_micros(col("ts")).as("us"), col("event_id"), col("event_type"))
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val pairs = ev.withColumn("from_type", lag("event_type", 1).over(w))
@@ -478,7 +475,7 @@ object AnalyticsQueries {
     * (the scaled score is re-rounded to 6 dp before summing so the
     * per-bin reduction is order-free). */
   def calibrationBins(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val thresh = li.agg(
       (sum(dec4(col("l_extendedprice"))).cast("double") / count(lit(1)))
         .as("mu"))
@@ -520,7 +517,7 @@ object AnalyticsQueries {
     * (`div` ≡ `//`), lift is one spelled-out double expression
     * floor-quantized to 6 dp. */
   def gainsCurve(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val thresh = li.agg(
       (sum(dec4(col("l_extendedprice"))).cast("double") / count(lit(1)))
         .as("mu"))
@@ -582,7 +579,7 @@ object AnalyticsQueries {
     * [[pcaPower]] discipline; the cross-category IV sum adds exact
     * integer nanos, order-free. */
   def infoValue(s: SparkSession, d: String): DataFrame = {
-    val o = t(s, d, "orders")
+    val o = Tables.load(s, d, "orders")
     val mu = o.agg(
       (sum(dec4(col("o_totalprice"))).cast("double") / count(lit(1)))
         .as("mu"))
@@ -681,7 +678,7 @@ object AnalyticsQueries {
     * vector [0.5,0.5,0.5,0.5] (unit norm, exact binary);
     * eigenvalue = the final iteration's ‖Cv‖. */
   def pcaPower(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val k = pcaCols.length
     val aggs =
       pcaCols.zipWithIndex.map { case (c, i) =>
@@ -766,7 +763,7 @@ object AnalyticsQueries {
     * to one row by MAX(event_type) first, so the as-of pick is
     * deterministic in both engines. */
   def lastTouchAttribution(s: SparkSession, d: String): DataFrame = {
-    val ev = t(s, d, "events")
+    val ev = Tables.load(s, d, "events")
     val purchases = ev
       .filter(col("event_type") === "purchase" && col("value").isNotNull)
       .select(col("user_id"), col("event_id"),
@@ -810,7 +807,7 @@ object AnalyticsQueries {
     * temporal complement of `ml_group_folds` (entity-disjoint) and
     * W1's single ordered split. */
   def tsCvFolds(s: SparkSession, d: String): DataFrame = {
-    val days = t(s, d, "events")
+    val days = Tables.load(s, d, "events")
       .select(expr("unix_micros(ts) div 86400000000").as("day"))
     val bounds = days.agg(min("day").as("dmin"), max("day").as("dmax"))
     val folds = s.range(1, 6).toDF("fold").crossJoin(broadcast(bounds))
@@ -851,7 +848,7 @@ object AnalyticsQueries {
     * rocAuc cardinality contract, which is precisely the population a
     * skew report exists to summarize. */
   def skewReport(s: SparkSession, d: String): DataFrame = {
-    val counts = t(s, d, "lineitem")
+    val counts = Tables.load(s, d, "lineitem")
       .groupBy(col("l_suppkey").as("key")).agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("cnt").asc, col("key").asc)
     counts.withColumn("rnk", row_number().over(w))

@@ -304,7 +304,7 @@ object MultimodalQueries {
   /** The image-dedup end-cap: connected components over the
     * perceptual-hash pairs, keep the min-id representative per
     * duplicate group (plus every unpaired image) — the image
-    * counterpart of [[graft.scaleops.Similarity.semDedup]]'s keep
+    * counterpart of [[graft.scaleops.Similarity.keepFromPairs]]'s keep
     * list. The whole keep SET is pinned, not just its size: the
     * exact sum of kept ids rides as a column (order-free integer
     * arithmetic), and `twins_all_dropped` witnesses that every

@@ -37,5 +37,4 @@ object QUtil {
   def moneySum(c: Column): Column = sum(c).cast("double")
 
   def r6(c: Column): Column = round(c, 6)
-  def r4(c: Column): Column = round(c, 4)
 }

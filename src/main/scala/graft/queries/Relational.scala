@@ -17,14 +17,11 @@ import QUtil._
   */
 object Relational {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame =
-    Tables.load(s, d, n)
-
   /** TPC-H Q1-style pricing summary. Exact decimal arithmetic so the
     * sums are order-independent (associativity) and match DuckDB
     * bit-for-bit after the final cast to double. */
   def q1PricingSummary(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val discPrice = dec4(col("l_extendedprice")) *
       (lit(1).cast("decimal(18,4)") - dec4(col("l_discount")))
     li.groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -51,9 +48,9 @@ object Relational {
     * order priority. Customer is the broadcast side; orders⋈lineitem
     * co-shuffles on orderkey (the natural key both sides share). */
   def q3SegmentRevenue(s: SparkSession, d: String): DataFrame = {
-    val cust = t(s, d, "customer").select("c_custkey", "c_mktsegment")
-    val ord = t(s, d, "orders").select("o_orderkey", "o_custkey", "o_orderpriority")
-    val li = t(s, d, "lineitem")
+    val cust = Tables.load(s, d, "customer").select("c_custkey", "c_mktsegment")
+    val ord = Tables.load(s, d, "orders").select("o_orderkey", "o_custkey", "o_orderpriority")
+    val li = Tables.load(s, d, "lineitem")
       .select(col("l_orderkey"),
         (dec4(col("l_extendedprice")) *
           (lit(1).cast("decimal(18,4)") - dec4(col("l_discount")))).as("rev"))
@@ -76,12 +73,12 @@ object Relational {
     * streams once; supplier/nation/region are all broadcast — zero
     * shuffle before the final aggregate. */
   def q5RegionalRevenue(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").select(col("l_suppkey"),
+    val li = Tables.load(s, d, "lineitem").select(col("l_suppkey"),
       (dec4(col("l_extendedprice")) *
         (lit(1).cast("decimal(18,4)") - dec4(col("l_discount")))).as("rev"))
-    val sup = t(s, d, "supplier").select("s_suppkey", "s_nationkey")
-    val nat = t(s, d, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    val reg = t(s, d, "region").select("r_regionkey", "r_name")
+    val sup = Tables.load(s, d, "supplier").select("s_suppkey", "s_nationkey")
+    val nat = Tables.load(s, d, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    val reg = Tables.load(s, d, "region").select("r_regionkey", "r_name")
     li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
@@ -103,9 +100,9 @@ object Relational {
     * customers with none. `left_semi`/`left_anti` avoid materializing
     * the join — at scale these stay one shuffle each on custkey. */
   def qSemiAnti(s: SparkSession, d: String): DataFrame = {
-    val cust = t(s, d, "customer").select("c_custkey", "c_nationkey")
-    val ordKeys = t(s, d, "orders").select("o_custkey")
-    val nat = t(s, d, "nation").select("n_nationkey", "n_name")
+    val cust = Tables.load(s, d, "customer").select("c_custkey", "c_nationkey")
+    val ordKeys = Tables.load(s, d, "orders").select("o_custkey")
+    val nat = Tables.load(s, d, "nation").select("n_nationkey", "n_name")
     val withOrders = cust.join(ordKeys, col("c_custkey") === col("o_custkey"), "left_semi")
       .groupBy("c_nationkey").agg(count(lit(1)).as("n_with_orders"))
     val withoutOrders = cust.join(ordKeys, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -134,7 +131,7 @@ object Relational {
     * orderkey). Revenue is decimal-exact so the ordering is identical
     * in both engines. */
   def qTopRevenueOrders(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").select(col("l_orderkey"),
+    val li = Tables.load(s, d, "lineitem").select(col("l_orderkey"),
       (dec4(col("l_extendedprice")) *
         (lit(1).cast("decimal(18,4)") - dec4(col("l_discount")))).as("rev"))
     li.groupBy("l_orderkey")
@@ -156,11 +153,11 @@ object Relational {
   /** Hierarchical rollup (free Spark surface beyond the reference —
     * SURVEY.md §2.4 note): region → nation subtotals + grand total. */
   def qRollup(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").select(col("l_suppkey"),
+    val li = Tables.load(s, d, "lineitem").select(col("l_suppkey"),
       dec4(col("l_extendedprice")).as("price"))
-    val sup = t(s, d, "supplier").select("s_suppkey", "s_nationkey")
-    val nat = t(s, d, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    val reg = t(s, d, "region").select("r_regionkey", "r_name")
+    val sup = Tables.load(s, d, "supplier").select("s_suppkey", "s_nationkey")
+    val nat = Tables.load(s, d, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    val reg = Tables.load(s, d, "region").select("r_regionkey", "r_name")
     li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
@@ -187,7 +184,7 @@ object Relational {
     // NTZ, identical under the engine's UTC zone) — a cast wrapped
     // around the column instead would block parquet pushdown in
     // NTZ-inferring sessions
-    t(s, d, "lineitem")
+    Tables.load(s, d, "lineitem")
       .filter(col("l_shipdate") >= lit("1995-01-01") &&
         col("l_shipdate") < lit("1996-01-01") &&
         col("l_discount").between(0.05, 0.07) &&
@@ -208,7 +205,7 @@ object Relational {
     * combinations in one pass (Expand + single aggregate — no
     * re-scans). */
   def qCube(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables.load(s, d, "lineitem")
       .cube(col("l_returnflag"), col("l_linestatus"))
       .agg(moneySum(dec4(col("l_quantity"))).as("sum_qty"),
         count(lit(1)).as("n_items"))
@@ -230,7 +227,7 @@ object Relational {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("o_custkey")
       .orderBy(col("od_ms").asc, col("o_orderkey").asc)
-    t(s, d, "orders")
+    Tables.load(s, d, "orders")
       .select(col("o_custkey"), col("o_orderkey"),
         unix_millis(col("o_orderdate").cast("timestamp")).as("od_ms"),
         dec4(col("o_totalprice")).as("price"))
@@ -262,7 +259,7 @@ object Relational {
     // DataFrame-API grouping sets (Spark 4 `groupingSets`) — no temp
     // view, so concurrent runs on one SparkSession can't clobber each
     // other's registration.
-    t(s, d, "lineitem")
+    Tables.load(s, d, "lineitem")
       .groupingSets(
         Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq.empty),
         col("l_returnflag"), col("l_linestatus"))
@@ -285,8 +282,8 @@ object Relational {
     * beyond the reference, SURVEY.md §2.3): nations that have urgent
     * orders but no low-priority ones, and those with both. */
   def qSetOps(s: SparkSession, d: String): DataFrame = {
-    val cust = t(s, d, "customer").select("c_custkey", "c_nationkey")
-    val ord = t(s, d, "orders").select("o_custkey", "o_orderpriority")
+    val cust = Tables.load(s, d, "customer").select("c_custkey", "c_nationkey")
+    val ord = Tables.load(s, d, "orders").select("o_custkey", "o_orderpriority")
     def nationsWith(priority: String) =
       ord.filter(col("o_orderpriority") === priority)
         .join(cust, col("o_custkey") === col("c_custkey"))
@@ -318,8 +315,8 @@ object Relational {
     * of customers by total spend within their nation — one shuffle,
     * three ranking functions over one window spec. */
   def qWindowRank(s: SparkSession, d: String): DataFrame = {
-    val cust = t(s, d, "customer").select("c_custkey", "c_nationkey")
-    val ord = t(s, d, "orders").select(col("o_custkey"),
+    val cust = Tables.load(s, d, "customer").select("c_custkey", "c_nationkey")
+    val ord = Tables.load(s, d, "orders").select(col("o_custkey"),
       dec4(col("o_totalprice")).as("price"))
     val spend = ord.join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy("c_nationkey", "c_custkey")
@@ -356,10 +353,10 @@ object Relational {
   /** Top-k per group via ranked window (decimal-exact ordering key so
     * both engines rank identically; ties broken on orderkey). */
   def qTopKPerGroup(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").select(col("l_orderkey"),
+    val li = Tables.load(s, d, "lineitem").select(col("l_orderkey"),
       (dec4(col("l_extendedprice")) *
         (lit(1).cast("decimal(18,4)") - dec4(col("l_discount")))).as("rev"))
-    val ord = t(s, d, "orders").select("o_orderkey", "o_orderpriority")
+    val ord = Tables.load(s, d, "orders").select("o_orderkey", "o_orderpriority")
     val perOrder = li.groupBy("l_orderkey")
       .agg(sum(col("rev")).as("rev_dec"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -391,11 +388,11 @@ object Relational {
     * are killed by the exact join, so the plain-join oracle applies
     * unchanged. */
   def qBloomSemiRevenue(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"),
         (dec4(col("l_extendedprice")) *
           (lit(1).cast("decimal(18,4)") - dec4(col("l_discount")))).as("rev"))
-    val urgent = t(s, d, "orders")
+    val urgent = Tables.load(s, d, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")
     // size the sketch from the BUILD side, not a static guess: the
@@ -424,9 +421,9 @@ object Relational {
     * when at least one of their lineitems was returned. The semi join
     * never materializes lineitem columns — one shuffle on orderkey. */
   def q4ExistsPriority(s: SparkSession, d: String): DataFrame = {
-    val returned = t(s, d, "lineitem")
+    val returned = Tables.load(s, d, "lineitem")
       .filter(col("l_returnflag") === "R").select("l_orderkey")
-    t(s, d, "orders")
+    Tables.load(s, d, "orders")
       .join(returned, col("o_orderkey") === col("l_orderkey"), "left_semi")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"))
@@ -444,12 +441,12 @@ object Relational {
     * aggregation runs FIRST so only the few surviving orderkeys join
     * — the join input is the aggregate's output, not the fact table. */
   def q18LargeOrders(s: SparkSession, d: String): DataFrame = {
-    val big = t(s, d, "lineitem")
+    val big = Tables.load(s, d, "lineitem")
       .groupBy("l_orderkey")
       .agg(sum(dec4(col("l_quantity"))).as("total_qty_dec"))
       .filter(col("total_qty_dec") > lit(250).cast("decimal(18,4)"))
-    big.join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(t(s, d, "customer").select("c_custkey", "c_name")),
+    big.join(Tables.load(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(Tables.load(s, d, "customer").select("c_custkey", "c_name")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_name"), col("o_orderkey"),
         col("o_totalprice").cast("double").as("o_totalprice"),
@@ -470,10 +467,10 @@ object Relational {
     * quantity) brackets. The OR of AND-brackets must still push the
     * shared part of the predicate into both scans; part is broadcast. */
   def q19Brackets(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").select(col("l_partkey"), col("l_quantity"),
+    val li = Tables.load(s, d, "lineitem").select(col("l_partkey"), col("l_quantity"),
       (dec4(col("l_extendedprice")) *
         (lit(1).cast("decimal(18,4)") - dec4(col("l_discount")))).as("rev"))
-    val p = t(s, d, "part").select("p_partkey", "p_brand", "p_size")
+    val p = Tables.load(s, d, "part").select("p_partkey", "p_brand", "p_size")
     val bracket1 = col("p_brand") === "Brand#1" &&
       col("p_size").between(1, 15) && col("l_quantity").between(1, 20)
     val bracket2 = col("p_brand") === "Brand#13" &&
@@ -500,7 +497,7 @@ object Relational {
     * is a zero-shuffle Expand: rows multiply map-side, the groupBy
     * partial-aggregates before any exchange. */
   def qUnpivotMeasures(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables.load(s, d, "lineitem")
       .select(col("l_orderkey"), dec4(col("l_quantity")).as("quantity"),
         dec4(col("l_extendedprice")).as("extendedprice"),
         dec4(col("l_discount")).as("discount"), dec4(col("l_tax")).as("tax"))
@@ -530,7 +527,7 @@ object Relational {
   def qWindowRangeFrame(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy(col("date_s"))
       .rangeBetween(-7L * 86400, 0)
-    t(s, d, "orders")
+    Tables.load(s, d, "orders")
       .select(col("o_custkey"), col("o_orderkey"),
         // DIV (floor division) to match the oracle's `//` — a
         // truncating double-divide cast would shift pre-epoch dates
@@ -560,7 +557,7 @@ object Relational {
   def qSupplierRank(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("s_nationkey")
       .orderBy(col("bal_dec").desc, col("s_suppkey").asc)
-    t(s, d, "supplier")
+    Tables.load(s, d, "supplier")
       .select(col("s_suppkey"), col("s_nationkey"),
         dec4(col("s_acctbal")).as("bal_dec"))
       .withColumn("bal_rank", dense_rank().over(w).cast("int"))

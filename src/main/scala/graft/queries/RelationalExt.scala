@@ -24,9 +24,6 @@ import QUtil._
   */
 object RelationalExt {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame =
-    Tables.load(s, d, n)
-
   private def revCol: org.apache.spark.sql.Column =
     dec4(col("l_extendedprice")) *
       (lit(1).cast("decimal(18,4)") - dec4(col("l_discount")))
@@ -37,18 +34,18 @@ object RelationalExt {
     * lineitem⋈orders on orderkey, then the final aggregate. The
     * shipdate band reaches the parquet scan. */
   def q7VolumeShipping(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
       .filter(col("l_shipdate") >= lit("1995-01-01") &&
         col("l_shipdate") < lit("1997-01-01"))
       .select(col("l_orderkey"), col("l_suppkey"),
         year(col("l_shipdate")).as("l_year"), revCol.as("rev"))
-    val sup = t(s, d, "supplier").select("s_suppkey", "s_nationkey")
-    val n1 = t(s, d, "nation").select(col("n_nationkey").as("sn_key"),
+    val sup = Tables.load(s, d, "supplier").select("s_suppkey", "s_nationkey")
+    val n1 = Tables.load(s, d, "nation").select(col("n_nationkey").as("sn_key"),
       col("n_name").as("supp_nation"))
-    val n2 = t(s, d, "nation").select(col("n_nationkey").as("cn_key"),
+    val n2 = Tables.load(s, d, "nation").select(col("n_nationkey").as("cn_key"),
       col("n_name").as("cust_nation"))
-    val ord = t(s, d, "orders").select("o_orderkey", "o_custkey")
-    val cust = t(s, d, "customer").select("c_custkey", "c_nationkey")
+    val ord = Tables.load(s, d, "orders").select("o_orderkey", "o_custkey")
+    val cust = Tables.load(s, d, "customer").select("c_custkey", "c_nationkey")
     li.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(n1), col("s_nationkey") === col("sn_key"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -80,19 +77,19 @@ object RelationalExt {
     * to ASIA customers. Share = exact decimal sums cast to double,
     * divided once, rounded 6 — identical in both engines. */
   def q8MarketShare(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         revCol.as("rev"))
-    val promo = t(s, d, "part").filter(col("p_type") === "PROMO")
+    val promo = Tables.load(s, d, "part").filter(col("p_type") === "PROMO")
       .select("p_partkey")
-    val sup = t(s, d, "supplier").select("s_suppkey", "s_nationkey")
-    val supNat = t(s, d, "nation").select(col("n_nationkey").as("sn_key"),
+    val sup = Tables.load(s, d, "supplier").select("s_suppkey", "s_nationkey")
+    val supNat = Tables.load(s, d, "nation").select(col("n_nationkey").as("sn_key"),
       col("n_name").as("supp_nation"))
-    val ord = t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"),
+    val ord = Tables.load(s, d, "orders").select(col("o_orderkey"), col("o_custkey"),
       year(col("o_orderdate")).as("o_year"))
-    val cust = t(s, d, "customer").select("c_custkey", "c_nationkey")
-    val asiaNat = t(s, d, "nation").select("n_nationkey", "n_regionkey")
-      .join(broadcast(t(s, d, "region").filter(col("r_name") === "ASIA")
+    val cust = Tables.load(s, d, "customer").select("c_custkey", "c_nationkey")
+    val asiaNat = Tables.load(s, d, "nation").select("n_nationkey", "n_regionkey")
+      .join(broadcast(Tables.load(s, d, "region").filter(col("r_name") === "ASIA")
         .select("r_regionkey")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey").as("cn_key"))
@@ -137,13 +134,13 @@ object RelationalExt {
     * (reference Q9 uses `ps_supplycost × quantity`). Profit per
     * (supplier nation, order year); every term is exact decimal. */
   def q9ProfitAdapted(s: SparkSession, d: String): DataFrame = {
-    val liRaw = t(s, d, "lineitem").select("l_orderkey", "l_partkey",
+    val liRaw = Tables.load(s, d, "lineitem").select("l_orderkey", "l_partkey",
       "l_suppkey", "l_quantity", "l_extendedprice", "l_discount")
-    val grn = t(s, d, "part").filter(col("p_type") === "LARGE")
+    val grn = Tables.load(s, d, "part").filter(col("p_type") === "LARGE")
       .select("p_partkey", "p_retailprice")
-    val sup = t(s, d, "supplier").select("s_suppkey", "s_nationkey")
-    val nat = t(s, d, "nation").select("n_nationkey", "n_name")
-    val ord = t(s, d, "orders").select(col("o_orderkey"),
+    val sup = Tables.load(s, d, "supplier").select("s_suppkey", "s_nationkey")
+    val nat = Tables.load(s, d, "nation").select("n_nationkey", "n_name")
+    val ord = Tables.load(s, d, "orders").select(col("o_orderkey"),
       year(col("o_orderdate")).as("o_year"))
     liRaw.join(broadcast(grn), col("l_partkey") === col("p_partkey"))
       .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
@@ -175,15 +172,15 @@ object RelationalExt {
     * exact decimal revenue with a custkey tiebreak, so both engines
     * cut the same top 20. */
   def q10ReturnedItems(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").filter(col("l_returnflag") === "R")
+    val li = Tables.load(s, d, "lineitem").filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"), revCol.as("rev"))
-    val ord = t(s, d, "orders")
+    val ord = Tables.load(s, d, "orders")
       .filter(col("o_orderdate") >= lit("1996-01-01") &&
         col("o_orderdate") < lit("1996-07-01"))
       .select("o_orderkey", "o_custkey")
-    val cust = t(s, d, "customer")
+    val cust = Tables.load(s, d, "customer")
       .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
-    val nat = t(s, d, "nation").select("n_nationkey", "n_name")
+    val nat = Tables.load(s, d, "nation").select("n_nationkey", "n_name")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
@@ -221,9 +218,9 @@ object RelationalExt {
     * pattern — a conditional count split on order priority — is
     * intact. */
   def q12LatePriority(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem").select("l_orderkey", "l_linestatus",
+    val li = Tables.load(s, d, "lineitem").select("l_orderkey", "l_linestatus",
       "l_shipdate")
-    val ord = t(s, d, "orders").select("o_orderkey", "o_orderdate",
+    val ord = Tables.load(s, d, "orders").select("o_orderkey", "o_orderdate",
       "o_orderpriority")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAY"))
@@ -248,8 +245,8 @@ object RelationalExt {
     * histogram of those counts. Two aggregations, each one shuffle;
     * the second input is already tiny. */
   def q13OrderDistribution(s: SparkSession, d: String): DataFrame = {
-    val cust = t(s, d, "customer").select("c_custkey")
-    val ord = t(s, d, "orders").select("o_orderkey", "o_custkey")
+    val cust = Tables.load(s, d, "customer").select("c_custkey")
+    val ord = Tables.load(s, d, "orders").select("o_orderkey", "o_custkey")
     cust.join(ord, col("c_custkey") === col("o_custkey"), "left")
       .groupBy("c_custkey")
       .agg(count(col("o_orderkey")).as("c_count"))
@@ -268,11 +265,11 @@ object RelationalExt {
     * revenue coming from PROMO-type parts, as a percentage. One
     * broadcast join, one row out; the date band is scan-pruned. */
   def q14PromoRevenue(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-03-01") &&
         col("l_shipdate") < lit("1996-04-01"))
       .select(col("l_partkey"), revCol.as("rev"))
-    val p = t(s, d, "part").select("p_partkey", "p_type")
+    val p = Tables.load(s, d, "part").select("p_partkey", "p_type")
     li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .agg(
         r6(lit(100.0) *
@@ -302,14 +299,14 @@ object RelationalExt {
     * max. The max is a one-row broadcast; equality is on the exact
     * decimal so "the" max is identical cross-engine. */
   def q15TopSupplier(s: SparkSession, d: String): DataFrame = {
-    val rev = t(s, d, "lineitem")
+    val rev = Tables.load(s, d, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01") &&
         col("l_shipdate") < lit("1996-04-01"))
       .select(col("l_suppkey"), revCol.as("rev"))
       .groupBy("l_suppkey")
       .agg(sum(col("rev")).as("total_rev_dec"))
     val maxRev = rev.agg(max(col("total_rev_dec")).as("max_rev"))
-    val sup = t(s, d, "supplier").select("s_suppkey", "s_name")
+    val sup = Tables.load(s, d, "supplier").select("s_suppkey", "s_name")
     rev.crossJoin(broadcast(maxRev))
       .filter(col("total_rev_dec") === col("max_rev"))
       .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
@@ -337,9 +334,9 @@ object RelationalExt {
     * integer/decimal arithmetic, no division, so the boundary is
     * exact in both engines. */
   def q17SmallQuantity(s: SparkSession, d: String): DataFrame = {
-    val brand = t(s, d, "part").filter(col("p_brand") === "Brand#3")
+    val brand = Tables.load(s, d, "part").filter(col("p_brand") === "Brand#3")
       .select("p_partkey")
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
       .join(broadcast(brand), col("l_partkey") === col("p_partkey"))
       .select(col("l_partkey"), dec4(col("l_quantity")).as("qty"),
         dec4(col("l_extendedprice")).as("price"))
@@ -374,9 +371,9 @@ object RelationalExt {
     * order — the exists/not-exists pair becomes per-order counts
     * joined back, two shuffles on orderkey total. */
   def q21WaitingSuppliers(s: SparkSession, d: String): DataFrame = {
-    val lo = t(s, d, "lineitem")
+    val lo = Tables.load(s, d, "lineitem")
       .select("l_orderkey", "l_suppkey", "l_shipdate")
-      .join(t(s, d, "orders")
+      .join(Tables.load(s, d, "orders")
         .filter(col("o_orderstatus") === "F")
         .select("o_orderkey", "o_orderdate"),
         col("l_orderkey") === col("o_orderkey"))
@@ -390,7 +387,7 @@ object RelationalExt {
     perSupp.filter(col("is_late") === 1L)
       .join(perOrder.filter(col("n_supp") > 1 && col("n_late") === 1L),
         col("l_orderkey") === col("po_key"))
-      .join(broadcast(t(s, d, "supplier").select("s_suppkey", "s_name")),
+      .join(broadcast(Tables.load(s, d, "supplier").select("s_suppkey", "s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy("s_name")
       .agg(count(lit(1)).as("numwait"))
@@ -425,12 +422,12 @@ object RelationalExt {
     * `bal > avg` is restated multiplication-only (`bal × n > Σbal`)
     * so the comparison is decimal-exact. */
   def q22IdleCustomers(s: SparkSession, d: String): DataFrame = {
-    val cust = t(s, d, "customer")
+    val cust = Tables.load(s, d, "customer")
       .select(col("c_custkey"), col("c_nationkey"),
         dec4(col("c_acctbal")).as("bal"))
     val stats = cust.filter(col("bal") > lit(0).cast("decimal(18,4)"))
       .agg(count(lit(1)).as("n_pos"), sum(col("bal")).as("total_pos"))
-    val recent = t(s, d, "orders")
+    val recent = Tables.load(s, d, "orders")
       .filter(col("o_orderdate") >= lit("1999-01-01"))
       .select("o_custkey")
     cust.crossJoin(broadcast(stats))

@@ -14,7 +14,7 @@ import graft.sources.Tables
 private[queries] trait ScaleAnnQueries extends ScaleBase {
   // ---- similarity search ----------------------------------------------
   def knnBrute(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     Similarity.knnBrute(emb, "vec_id", "embedding",
       queries = emb.filter(col("vec_id") < 10), k = 5)
   }
@@ -94,7 +94,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * COUNT(*) — reverting to static or single-probe sizing throws
     * here and hash-mismatches there. */
   def knnLsh(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val approx =
       Similarity.knnLshDerived(emb, "vec_id", "embedding", q, k = 5, dim = 64)
@@ -209,7 +209,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * separately by knn_ivf_full (nProbe = nList ≡ brute,
     * hash-matched). */
   def knnIvf(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val approx = Similarity.knnIvfDerived(emb, "vec_id", "embedding", q, k = 5)
     val p = Similarity.ivfParamsOf(approx).getOrElse(
@@ -243,7 +243,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * high: measured recall (RecallProbe) 1.000 at every SF
     * (sf0.001 / 0.01 / 0.1); bound 0.9. */
   def knnSq8(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     knnCertify(
       Similarity.knnSq8(emb, "vec_id", "embedding", q, k = 5, refine = 4),
@@ -267,7 +267,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * at sf0.001/0.01/0.1) — the SQ8 + refine stage loses nothing;
     * all loss is cell routing. Bound 0.75. */
   def knnIvfSq8(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val approx =
       Similarity.knnIvfSq8Derived(emb, "vec_id", "embedding", q, k = 5,
@@ -307,7 +307,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * knn_ivf_sq8; the codes memo invalidates with the index (the
     * loadOrBuild rebuild deletes it). */
   def knnIvfSq8Prebuilt(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val nCorpus = emb.count()
     val p = Similarity.ivfDerivedParams(nCorpus)
@@ -349,7 +349,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * knn_ivf; the oracle replays nList/nProbe AND the refine rule
     * from COUNT(*). */
   def knnIvfPq(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val approx = Similarity.knnIvfPq(emb, "vec_id", "embedding", q, k = 5)
     val p = Similarity.ivfParamsOf(approx).getOrElse(
@@ -378,7 +378,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * re-encode. Same derived sizing, refine rule and 0.75 bound as
     * knn_ivf_pq, so the same oracle applies. */
   def knnIvfPqPrebuilt(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val nCorpus = emb.count()
     val p = Similarity.ivfDerivedParams(nCorpus)
@@ -438,7 +438,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * scan), with 6-dp-rounded cosines and the 0.7/0.3 literal weights
     * shared by both engines. */
   def knnMmr(s: SparkSession, d: String): DataFrame =
-    Similarity.mmrSelect(t(s, d, "embeddings"), "vec_id", "embedding",
+    Similarity.mmrSelect(Tables.load(s, d, "embeddings"), "vec_id", "embedding",
       queryId = 0L)
 
   val knnMmrOracle: String = {
@@ -489,7 +489,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * (build, cell routing, scoring) to a hash-match, while `knn_ivf`
     * exercises the approximate regime. */
   def knnIvfFull(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     Similarity.knnIvf(emb, "vec_id", "embedding",
       queries = emb.filter(col("vec_id") < 10), k = 5,
       nList = 8, nProbe = 8)
@@ -629,7 +629,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
   }
 
   def knnIvfPrebuilt(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     // same corpus-derived sizing as knn_ivf (the tag invalidates the
     // saved index if the derivation rule ever changes); the loaded
@@ -676,7 +676,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * measured); [[Similarity.knnLshDerived]] remains the certified
     * explicit fallback (`knn_lsh`). */
   def knnAutoQ(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val n = emb.count()
     val p = Similarity.ivfDerivedParams(n, Similarity.knnAutoProbeFrac)
@@ -770,7 +770,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * index (`target/ivf_index_base/<sf>`), so the timed rep pays
     * assignment + search only — the per-batch cost at scale. */
   def knnIvfIncremental(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val batch = emb.filter(col("vec_id") < 100)
     val base = emb.filter(col("vec_id") >= 100)
     val baseIndex = ivfLoadOrBuild(s, "target/ivf_index_base", d)(
@@ -814,7 +814,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * decaying on this harness's near-uniform synthetic vectors,
     * where no linear-candidate method has locality to exploit). */
   def knnGraphQ(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     Similarity.knnGraphAuto(emb, "vec_id", "embedding", k = 5,
       quantizer = Some(knnGraphQuantizer(s, d, emb)))
   }
@@ -850,7 +850,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * over base ∪ batch — the oracle replays every row of it plus
     * both derivations from COUNT(*). */
   def knnGraphIncremental(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val n = emb.count()
     val bMod = math.max(5L, n / 500L)
     val base = emb.filter(col("vec_id") % bMod =!= 4)
@@ -944,7 +944,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * `ranks_dense`; `n_true` = 40·m replayed. */
   def knnGraphDescentPlanted(s: SparkSession, d: String): DataFrame = {
     import graft.functions.ArrayDot
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val e = emb.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
     // plant on a BOUNDED family set (the first 500 ids — every SF has
@@ -1064,7 +1064,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * the embedding dim. Recall ≥ 0.9 against the exact filtered
     * top-k in whichever regime this SF lands. */
   def knnFilteredIvf(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val n = emb.count()
     // label > 0 is the BROAD-filter regime (90% selective), where the
@@ -1127,7 +1127,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * would only be covered by its PlanSpec shape pin. Same recall
     * ≥ 0.9 certification vs the exact filtered twin. */
   def knnFilteredIvfFloat(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val n = emb.count()
     val filtered = emb.filter(col("label") > 0)
@@ -1156,7 +1156,7 @@ private[queries] trait ScaleAnnQueries extends ScaleBase {
     * it (the knnIvfPqPrebuilt protocol); recall floor 0.75 = the PQ
     * family's certified bound at the derived refine pool. */
   def knnFilteredPq(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val q = emb.filter(col("vec_id") < 10)
     val n = emb.count()
     val filtered = emb.filter(col("label") > 0)

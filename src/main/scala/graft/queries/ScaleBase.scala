@@ -8,9 +8,6 @@ import graft.sources.Tables
   * (split from the 2.3k-line ScaleQueries.scala in r10 — pure
   * mechanical move, zero behavior change). */
 private[queries] trait ScaleBase {
-  protected def t(s: SparkSession, d: String, n: String): DataFrame =
-    Tables.load(s, d, n)
-
   /** Width-before-weight load for per-row-HEAVY ops (shingling,
     * n-gram scoring, tokenize-everything maps) over a bytes-small
     * table: one parquet file is ONE scan partition at any
@@ -19,14 +16,15 @@ private[queries] trait ScaleBase {
     * The shuffle costs megabytes; the map is the dominant term
     * (measured on text_pii_redact at the sf1 soak: 8.7 → 2.3 s).
     * Only for heavy maps — plain column scans and filters stay on
-    * [[t]] (an unconditional shuffle would tax every cheap query). */
+    * `Tables.load` (an unconditional shuffle would tax every cheap
+    * query). */
   protected def tw(s: SparkSession, d: String, n: String,
                  key: String): DataFrame =
     // explicit count via Sessions.widen (r15): repartition(col) is
     // AQE-coalescible, and at bench SFs the ~1 MB shuffle coalesced
     // back to ONE partition — exactly the single-core heavy map this
     // helper exists to prevent
-    graft.Sessions.widen(t(s, d, n), col(key))
+    graft.Sessions.widen(Tables.load(s, d, n), col(key))
 
   /** Exact micro-units (×1e6) of a double already on the 1e-6 grid
     * (i.e. produced by a per-row `round(x, 6)`). The value is within

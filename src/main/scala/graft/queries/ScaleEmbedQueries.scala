@@ -44,7 +44,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * [[Similarity.nearDupPairsAuto]], which routes away from brute
     * exactly when n makes this shape quadratic-expensive. */
   def dedupEmbedding(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val (sampled, _) = embSample(emb, emb.count())
     Similarity.nearDupPairs(sampled, "vec_id", "embedding", threshold = 0.4)
   }
@@ -64,7 +64,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * brute twin is harness-SF certification cost — production callers
     * use [[Similarity.nearDupPairsLshDerived]] alone. */
   def dedupEmbeddingLsh(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val n = emb.count()
     // full-corpus sizing as formula values (one COUNT, no pair work):
     // what production derives at this SF — the oracle replays it
@@ -171,7 +171,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * gate SF, `routed_lsh` flips and the subset output breaks
     * `n_pairs`/`sum_cos` too. */
   def dedupEmbeddingAuto(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val n = emb.count()
     // the FULL-corpus routing decision is pure arithmetic on n — the
     // thing the router exists for — emitted and oracle-replayed
@@ -256,7 +256,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * plus an O(n_planted) exact side. */
   def dedupEmbeddingPlanted(s: SparkSession, d: String): DataFrame = {
     import graft.functions.ArrayDot
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val e = emb.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
     val pl = e.filter(col("vec_id") % 20 === 0)
@@ -352,9 +352,10 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * capped to a ~1000-vertex deterministic id-hash sample so the
     * certification pays O(cap²), not O(n²) — the sampled exact pair
     * set is what the oracle replays; production callers use
-    * [[Similarity.semDedup]] alone and never pay any twin. */
+    * [[Similarity.semDedupPairs]] + [[Similarity.keepFromPairs]]
+    * alone and never pay any twin. */
   def dedupSemantic(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     // cells sized to the corpus (k ∝ n, the SemDeDup paper's own
     // discipline — fixed k lets per-cell population, and the n²/k
     // candidate count, grow quadratically; since r8 the rule is
@@ -482,7 +483,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * emitted). Exact restriction-equality vs the full frozen-centroid
     * run is spec-pinned (SimilaritySpec), not re-paid at the gate. */
   def dedupSemanticIncremental(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     // SF-INVARIANT batch (the m3 modulus pattern): a production
     // increment is a bounded daily batch, not a corpus share — a
     // %5 split made the "increment" 20% of the corpus, so the row's
@@ -556,7 +557,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * posexplode + one groupBy: scan count independent of dimension;
     * decimal-exact sums so the mean is order-independent. */
   def embCentroids(s: SparkSession, d: String): DataFrame =
-    t(s, d, "embeddings")
+    Tables.load(s, d, "embeddings")
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy("label", "pos")
       .agg(
@@ -596,7 +597,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * ~256k terms of the gate corpus a multiply-based engine ROUND
     * would flip ~1e-4 of terms vs BigDecimal rounding. */
   def embSilhouette(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val cent = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy("label", "pos")
@@ -676,7 +677,7 @@ private[queries] trait ScaleEmbedQueries extends ScaleAnnQueries {
     * descent tier feeds the same mutual/CC stages (k-bounded edges —
     * the mutual join and CC cost n·k rows regardless of route). */
   def embMutualKnnClusters(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     val fwd = Similarity.knnGraphAuto(emb, "vec_id", "embedding", k = 4,
       quantizer = Some(knnGraphQuantizer(s, d, emb)))
       .select(col("query_id").as("a"), col("neighbor_id").as("b"))

@@ -15,7 +15,7 @@ import graft.sources.Tables
   * behavior change). */
 object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQueries {
   def textTokens(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents").select(
+    Tables.load(s, d, "documents").select(
       col("doc_id"),
       TextAnalysis.tokenCount(col("text")).as("n_tokens"),
       length(col("text")).as("n_chars"),
@@ -112,7 +112,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
 
   // ---- dedup -----------------------------------------------------------
   def dedupExact(s: SparkSession, d: String): DataFrame =
-    Dedup.exactStats(t(s, d, "documents"),
+    Dedup.exactStats(Tables.load(s, d, "documents"),
       Dedup.normalizedText(col("text")))
 
   val dedupExactOracle: String =
@@ -160,7 +160,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * The O(n²) brute twin is harness-SF-only certification cost —
     * production callers use [[Dedup.simHashNearDups]] alone. */
   def dedupSimHash(s: SparkSession, d: String): DataFrame = {
-    val sigs = Dedup.simHashSignatures(t(s, d, "documents"), "doc_id", "text")
+    val sigs = Dedup.simHashSignatures(Tables.load(s, d, "documents"), "doc_id", "text")
       .localCheckpoint(eager = false) // feeds approx + both brute sides
     val approx = Dedup.simHashNearDupsFromSigs(sigs, "doc_id", maxDist = 3)
     val brute = sigs.select(col("doc_id").as("a"), col("sig").as("sig_a"))
@@ -171,7 +171,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
       .filter(col("dist") <= 3)
     val missing = brute.join(approx, Seq("a", "b", "dist"), "left_anti")
     val extra = approx.join(brute, Seq("a", "b", "dist"), "left_anti")
-    t(s, d, "documents").agg(count(lit(1)).as("n_docs"))
+    Tables.load(s, d, "documents").agg(count(lit(1)).as("n_docs"))
       .crossJoin(missing.agg(count(lit(1)).as("n_missing")))
       .crossJoin(extra.agg(count(lit(1)).as("n_extra")))
       .select(col("n_docs"), lit(4).as("n_chunks"), lit(3).as("max_dist"),
@@ -200,7 +200,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * old×old was settled by prior runs). The oracle recomputes the
     * full pair set and applies the same restriction. */
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
+    val docs = Tables.load(s, d, "documents")
     Dedup.exactJaccardPairsIncremental(
       docs.filter(col("doc_id") % 5 =!= 4),
       docs.filter(col("doc_id") % 5 === 4),
@@ -219,7 +219,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * 3·triangles/wedges. The oracle recomputes the same graph from
     * the shared Jaccard-pair CTE. */
   def dedupTriangles(s: SparkSession, d: String): DataFrame = {
-    val edges = Dedup.exactJaccardPairs(t(s, d, "documents"), "doc_id",
+    val edges = Dedup.exactJaccardPairs(Tables.load(s, d, "documents"), "doc_id",
       "text", shingleK = 2, minJaccard = 0.8)
       .select(col("a"), col("b"))
       .localCheckpoint(eager = false)
@@ -273,7 +273,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * replays ALL five rounds bit-for-bit as chained (unrolled) CTEs —
     * the whole trajectory is pinned, not just the fixpoint shape. */
   def graphPagerank(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.exactJaccardPairs(t(s, d, "documents"), "doc_id",
+    val pairs = Dedup.exactJaccardPairs(Tables.load(s, d, "documents"), "doc_id",
       "text", shingleK = 2, minJaccard = 0.8)
     graft.operators.PageRank.pagerank(pairs, "a", "b",
       damping = 0.85, iters = 5)
@@ -323,7 +323,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * driver loop under the 2M-edge broadcast-discipline bound,
     * distributed join+argmax rounds above). */
   def graphCommunities(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.exactJaccardPairs(t(s, d, "documents"), "doc_id",
+    val pairs = Dedup.exactJaccardPairs(Tables.load(s, d, "documents"), "doc_id",
       "text", shingleK = 2, minJaccard = 0.8)
     graft.operators.LabelPropagation.propagate(pairs, "a", "b", iters = 3)
       .select(col("id").as("doc_id"), col("label"))
@@ -416,7 +416,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * recursive CTE — transitive "A~B, B~C ⇒ {A,B,C} one cluster"
     * semantics pinned across engines. */
   def dedupComponents(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.exactJaccardPairs(t(s, d, "documents"), "doc_id",
+    val pairs = Dedup.exactJaccardPairs(Tables.load(s, d, "documents"), "doc_id",
       "text", shingleK = 2, minJaccard = 0.8)
     graft.operators.ConnectedComponents.components(pairs, "a", "b")
       .select(col("id").as("doc_id"), col("comp").as("component"))
@@ -440,11 +440,11 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * Composes components → broadcast-join doc metadata → one rank
     * window over the (tiny) clustered subset. */
   def dedupSurvivorship(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.exactJaccardPairs(t(s, d, "documents"), "doc_id",
+    val pairs = Dedup.exactJaccardPairs(Tables.load(s, d, "documents"), "doc_id",
       "text", shingleK = 2, minJaccard = 0.8)
     val comps = graft.operators.ConnectedComponents.components(pairs, "a", "b")
       .select(col("id").as("doc_id"), col("comp").as("component"))
-    val meta = t(s, d, "documents").select("doc_id", "n_chars")
+    val meta = Tables.load(s, d, "documents").select("doc_id", "n_chars")
     val w = Window.partitionBy("component")
       .orderBy(col("n_chars").desc, col("doc_id").asc)
     comps.join(meta, "doc_id")
@@ -491,7 +491,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * every downstream stage reuses the materialized blocks. Decimal
     * sum keeps the per-cluster jaccard total order-independent. */
   def dedupPipeline(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
+    val docs = Tables.load(s, d, "documents")
     val pairs = Dedup.exactJaccardPairs(docs, "doc_id", "text",
       shingleK = 2, minJaccard = 0.8)
       .localCheckpoint(eager = false) // materialized by CC's first pass
@@ -552,7 +552,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * duplicate group. Catches token-reordered near-copies that exact
     * normalization misses. */
   def dedupFingerprint(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
+    Tables.load(s, d, "documents")
       .groupBy(TextAnalysis.fingerprint(col("text")).as("fp"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
       .filter(col("n_docs") > 1)
@@ -568,7 +568,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * the corpus), which is the whole point of filtered vector search:
     * never score what the metadata already excludes. */
   def knnFiltered(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
+    val emb = Tables.load(s, d, "embeddings")
     Similarity.knnBrute(emb.filter(col("label") === 1), "vec_id", "embedding",
       queries = emb.filter(col("vec_id") < 10), k = 3)
   }
@@ -593,7 +593,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * segmentation surface (word pieces + digits + punctuation as
     * separate tokens), aggregated per source. */
   def textBpeish(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
+    Tables.load(s, d, "documents")
       .groupBy("source")
       .agg(
         sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("ws_tokens"),
@@ -609,7 +609,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
   /** TF-IDF top-3 terms per doc (df/N over the FULL corpus, output
     * restricted to the first 20 docs to keep the result bounded). */
   def textTfidf(s: SparkSession, d: String): DataFrame =
-    TextAnalysis.tfidfTopTerms(t(s, d, "documents"), "doc_id", "text", 3)
+    TextAnalysis.tfidfTopTerms(Tables.load(s, d, "documents"), "doc_id", "text", 3)
       .filter(col("doc_id") < 20)
 
   val textTfidfOracle: String =
@@ -641,7 +641,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     val quota = typedLit(Map(
       "click" -> 10, "view" -> 5, "purchase" -> 100,
       "signup" -> 100, "error" -> 50))
-    t(s, d, "events")
+    Tables.load(s, d, "events")
       // `%` not pmod: same truncated-modulo semantics as the oracle's
       // DuckDB `%` if event_ids were ever negative.
       .filter(col("event_id") % 100 <
@@ -667,7 +667,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * dedup keep-list (exact pairs ≥ 0.4 over the survivors'
     * embeddings → connected components → min-id survivor; the
     * SQL-replayable twin of the SemDeDup prune — production swaps in
-    * [[Similarity.semDedup]] on the same keep-list contract) →
+    * [[Similarity.semDedupPairs]] on the same keep-list contract) →
     * 64/48 chunking → 512-token sequence packing. Stage COMPOSITION
     * is what this row certifies: schema drift or filter reordering
     * between any two stages moves a count and flips the hash. Every
@@ -698,7 +698,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
       .filter(lit(2L) * col("dup_tokens") <= col("n_tokens"))
       .select("doc_id", "source", "text")
       .localCheckpoint(eager = false) // feeds emb semi-join, anti, count
-    val embS = t(s, d, "embeddings")
+    val embS = Tables.load(s, d, "embeddings")
       .join(spanPass.select(col("doc_id").as("vec_id")), Seq("vec_id"),
         "left_semi")
     val pairs = Similarity.nearDupPairs(embS, "vec_id", "embedding",
@@ -920,7 +920,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     // row_number window over the raw aggregate would funnel the whole
     // vocabulary through one task.
     val w = Window.orderBy(col("freq").desc, col("word").asc)
-    t(s, d, "documents")
+    Tables.load(s, d, "documents")
       .select(explode(split(lower(col("text")), "[^a-z]+")).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("freq"))
@@ -949,7 +949,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * scores are order-independent — the oracle is the identical
     * formulation in SQL. */
   def tfidfCosinePairs(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents").filter(col("doc_id") < 150)
+    val docs = Tables.load(s, d, "documents").filter(col("doc_id") < 150)
     val terms = docs.select(col("doc_id"),
       explode(TextAnalysis.tokens(lower(col("text")))).as("term"))
     val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1017,7 +1017,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts"), col("event_id")).rowsBetween(-10, -1)
     val vd = QUtil.dec6(col("value"))
-    val scored = t(s, d, "events")
+    val scored = Tables.load(s, d, "events")
       .withColumn("s1", sum(vd).over(w))
       .withColumn("s2", sum(vd * vd).over(w))
       .withColumn("n10", count(col("value")).over(w))
@@ -1056,7 +1056,7 @@ object ScaleQueries extends ScaleBase with ScaleAnnQueries with ScaleEmbedQuerie
     * sample a debugging / eval set wants. One window pass. */
   def perGroupSample(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    t(s, d, "events")
+    Tables.load(s, d, "events")
       .withColumn("rn", row_number().over(w).cast("int"))
       .filter(col("rn") <= 3)
       .select(col("user_id"), col("rn"), col("event_id"),

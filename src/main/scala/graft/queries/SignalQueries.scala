@@ -14,14 +14,11 @@ import QUtil._
   * in DuckDB SQL term for term. */
 object SignalQueries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame =
-    Tables.load(s, d, n)
-
   // ---- BM25 ranked retrieval ------------------------------------------
   private val bmTerms = Seq("spark", "join", "hash")
 
   def bm25Rank(s: SparkSession, d: String): DataFrame =
-    Retrieval.bm25(t(s, d, "documents"), "doc_id", "text", bmTerms)
+    Retrieval.bm25(Tables.load(s, d, "documents"), "doc_id", "text", bmTerms)
 
   val bm25Oracle: String =
     Retrieval.bm25OracleSql("documents", "doc_id", "text", bmTerms)
@@ -30,7 +27,7 @@ object SignalQueries {
   private val rakeStops = Seq("a", "the")
 
   def rakeKeywords(s: SparkSession, d: String): DataFrame =
-    Retrieval.rakeKeywords(t(s, d, "documents"), "doc_id", "text",
+    Retrieval.rakeKeywords(Tables.load(s, d, "documents"), "doc_id", "text",
       rakeStops, topK = 3, docFilter = col("doc_id") < 20)
 
   val rakeOracle: String =
@@ -47,7 +44,7 @@ object SignalQueries {
     */
   def ndcgAt10(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = t(s, d, "documents")
+    val docs = Tables.load(s, d, "documents")
     val ranked = Retrieval.bm25(docs, "doc_id", "text", bmTerms, topK = 10)
     val w = Window.orderBy(col("score").desc, col("doc_id").asc)
     val withRank = ranked.withColumn("rank", row_number().over(w))
@@ -94,7 +91,7 @@ object SignalQueries {
 
   // ---- per-source KL divergence ---------------------------------------
   def sourceDivergence(s: SparkSession, d: String): DataFrame =
-    Retrieval.sourceDivergence(t(s, d, "documents"), "source", "text")
+    Retrieval.sourceDivergence(Tables.load(s, d, "documents"), "source", "text")
 
   val sourceDivergenceOracle: String =
     Retrieval.sourceDivergenceOracleSql("documents", "source", "text")
@@ -105,7 +102,7 @@ object SignalQueries {
     * integer Mann–Whitney identity. Score cardinality = the group
     * count (≤ 9), honoring rocAuc's distinct-score contract. */
   def rocAuc(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val pred = li.groupBy("l_returnflag", "l_linestatus")
       .agg((sum(dec4(col("l_quantity"))).cast("double") / count(lit(1))).as("pred"))
     val joined = li.join(broadcast(pred), Seq("l_returnflag", "l_linestatus"))
@@ -144,7 +141,7 @@ object SignalQueries {
 
   def cusumChanges(s: SparkSession, d: String): DataFrame =
     graft.ts.RollingFeatures.cusum(
-      t(s, d, "events")
+      Tables.load(s, d, "events")
         .filter(col("user_id") < 3 && col("value").isNotNull)
         .select(col("user_id"), col("event_id"), col("ts"), col("value")),
       "user_id", Seq(col("ts"), col("event_id")), "value",
@@ -162,7 +159,7 @@ object SignalQueries {
     * single shuffle builds the whole history at any scale. */
   def scd2History(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ev = t(s, d, "events").filter(col("user_id") < 5)
+    val ev = Tables.load(s, d, "events").filter(col("user_id") < 5)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_id"), col("event_type"))
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
@@ -247,7 +244,7 @@ object SignalQueries {
     * then bin = number of cuts strictly below the value. Per-bin row
     * counts and value ranges certify the cut placement end to end. */
   def quantileBins(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val fracs = (1 to 9).map(_ / 10.0)
     val n = li.filter(col("l_extendedprice").isNotNull).count()
     val cuts = graft.stats.Histogram.exactQuantiles(
@@ -281,7 +278,7 @@ object SignalQueries {
     * pass + a 1×1-row join at any scale. */
   def abTtest(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val ev = t(s, d, "events")
+    val ev = Tables.load(s, d, "events")
       .filter(col("event_type").isin("click", "purchase") &&
         col("value").isNotNull)
     val g = ev.groupBy("event_type").agg(
@@ -347,7 +344,7 @@ object SignalQueries {
     import org.apache.spark.ml.classification.LogisticRegression
     import org.apache.spark.ml.feature.VectorAssembler
     import org.apache.spark.ml.functions.vector_to_array
-    val docs = t(s, d, "documents")
+    val docs = Tables.load(s, d, "documents")
     val gated = graft.scaleops.TrainingData.gopherGate(docs, "doc_id", "text",
       minTokens = 10)
     val feat = gated.select(col("doc_id"),
@@ -426,7 +423,7 @@ object SignalQueries {
   private val bpeMerges = 6
 
   def bpeTrainMerges(s: SparkSession, d: String): DataFrame =
-    graft.scaleops.BpeTrain.train(t(s, d, "documents"), "text", bpeMerges)._1
+    graft.scaleops.BpeTrain.train(Tables.load(s, d, "documents"), "text", bpeMerges)._1
 
   val bpeTrainOracle: String = graft.scaleops.BpeTrain.oracleSql(
     "documents", "text", bpeMerges,
@@ -434,7 +431,7 @@ object SignalQueries {
       "c AS pair_count FROM merges")
 
   def bpeSegment(s: SparkSession, d: String): DataFrame =
-    graft.scaleops.BpeTrain.train(t(s, d, "documents"), "text", bpeMerges)._2
+    graft.scaleops.BpeTrain.train(Tables.load(s, d, "documents"), "text", bpeMerges)._2
       .orderBy(col("cnt").desc, col("word").asc).limit(20)
 
   val bpeSegmentOracle: String = graft.scaleops.BpeTrain.oracleSql(
@@ -446,7 +443,7 @@ object SignalQueries {
     * BPE-token / char counts — the compression-ratio report a
     * tokenizer-training loop watches. */
   def bpeApply(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
+    val docs = Tables.load(s, d, "documents")
     val vocab = graft.scaleops.BpeTrain.train(docs, "text", bpeMerges)._2
     graft.scaleops.BpeTrain.applyBpe(docs, "doc_id", "text", vocab)
       .filter(col("doc_id") < 50)

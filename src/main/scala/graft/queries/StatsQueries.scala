@@ -14,19 +14,16 @@ import QUtil._
   * DuckDB oracle. */
 object StatsQueries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame =
-    Tables.load(s, d, n)
-
   // ---- D1: auto-binned histograms -------------------------------------
   def histQuantity(s: SparkSession, d: String): DataFrame =
-    Histogram.histogram(t(s, d, "lineitem"), "l_quantity")
+    Histogram.histogram(Tables.load(s, d, "lineitem"), "l_quantity")
 
   def histPrice(s: SparkSession, d: String): DataFrame =
-    Histogram.histogram(t(s, d, "lineitem"), "l_extendedprice")
+    Histogram.histogram(Tables.load(s, d, "lineitem"), "l_extendedprice")
 
   // ---- D2: scatter feed (projection, deterministic sample) ------------
   def scatterSample(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
+    Tables.load(s, d, "lineitem")
       .filter(col("l_orderkey") % 500 === 0)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_quantity"), col("l_extendedprice"))
@@ -39,7 +36,7 @@ object StatsQueries {
   private val corrFeatures = Seq("l_quantity", "l_discount", "l_tax")
 
   def corrLineitem(s: SparkSession, d: String): DataFrame =
-    Correlation.corrWithLong(t(s, d, "lineitem"), corrFeatures, "l_extendedprice")
+    Correlation.corrWithLong(Tables.load(s, d, "lineitem"), corrFeatures, "l_extendedprice")
 
   val corrOracle: String = corrFeatures
     .map(f =>
@@ -48,14 +45,14 @@ object StatsQueries {
 
   // ---- D5: per-group ACF ----------------------------------------------
   def acfEvents(s: SparkSession, d: String): DataFrame =
-    Acf.acf(t(s, d, "events"), "user_id",
+    Acf.acf(Tables.load(s, d, "events"), "user_id",
       Seq(col("ts"), col("event_id")), "value", nLags = 10)
 
   /** The same ACF through the custom TypedImperativeAggregate — one
     * shuffle instead of two; checked against the identical oracle so
     * the two formulations are pinned to each other AND to DuckDB. */
   def acfEventsAgg(s: SparkSession, d: String): DataFrame =
-    Acf.acfViaAggregate(t(s, d, "events"), "user_id",
+    Acf.acfViaAggregate(Tables.load(s, d, "events"), "user_id",
       unix_micros(col("ts")), "value", nLags = 10,
       ord2Col = col("event_id"))
 
@@ -65,7 +62,7 @@ object StatsQueries {
     * (one stats pass, one combined quantile sort, one binning pass —
     * job count independent of column count). */
   def histAll(s: SparkSession, d: String): DataFrame =
-    Histogram.histogramAll(t(s, d, "lineitem"),
+    Histogram.histogramAll(Tables.load(s, d, "lineitem"),
       Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
 
   val histAllOracle: String =
@@ -79,7 +76,7 @@ object StatsQueries {
     * Python call at a time; here the scan count is independent of the
     * number of pairs). */
   def corrMatrix(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val pairs = for {
       i <- cols.indices; j <- cols.indices if i < j
@@ -102,7 +99,7 @@ object StatsQueries {
   /** One pass for all groups × the feature — projection + sort, not
     * the reference's G×F filter-scans (data_analysis.py:64-66). */
   def groupSeries(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
+    Tables.load(s, d, "events")
       .filter(col("user_id") < 5)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("value"))
@@ -116,7 +113,7 @@ object StatsQueries {
     * the identical prediction) then the full metric report — the
     * shape of M8+D7-D9 without a fitted model in the loop. */
   def evalMetrics(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val pred = li.groupBy("l_returnflag", "l_linestatus")
       .agg((sum(dec4(col("l_quantity"))).cast("double") / count(lit(1))).as("pred"))
     val joined = li.join(broadcast(pred), Seq("l_returnflag", "l_linestatus"))
@@ -153,7 +150,7 @@ object StatsQueries {
     * `dropAllNullColumns`), emitted as rows so the oracle can check
     * the exact numbers the drop decision uses. */
   def nullAudit(s: SparkSession, d: String): DataFrame = {
-    val ev = t(s, d, "events").drop("ts") // ts re-derived; audit raw columns
+    val ev = Tables.load(s, d, "events").drop("ts") // ts re-derived; audit raw columns
     val counts = ev.select(ev.columns.map(c => count(col(c)).as(c)).toSeq: _*)
     val stackExpr = ev.columns
       .map(c => s"'$c', $c").mkString(s"stack(${ev.columns.length}, ", ", ", ") as (column_name, n_nonnull)")
@@ -167,7 +164,7 @@ object StatsQueries {
 
   // ---- P7: distinct values --------------------------------------------
   def distinctEventTypes(s: SparkSession, d: String): DataFrame =
-    Cleaning.distinctValues(t(s, d, "events"), "event_type")
+    Cleaning.distinctValues(Tables.load(s, d, "events"), "event_type")
 
   val distinctOracle: String = "SELECT DISTINCT event_type FROM events"
 
@@ -175,7 +172,7 @@ object StatsQueries {
   private val lookBack = 4
 
   def splitCounts(s: SparkSession, d: String): DataFrame = {
-    val split = TimeSeries.orderedSplit(t(s, d, "events"), "user_id",
+    val split = TimeSeries.orderedSplit(Tables.load(s, d, "events"), "user_id",
       Seq(col("ts"), col("event_id")), lookBack)
     split.groupBy("user_id").agg(
       count(lit(1)).as("n"),
@@ -200,7 +197,7 @@ object StatsQueries {
     * oracle derives the same numbers from lag/lead identities —
     * window[0].value ≡ lag(value, lookBack−1), label ≡ lead(value). */
   def windowStats(s: SparkSession, d: String): DataFrame = {
-    val win = TimeSeries.slidingWindows(t(s, d, "events"), "user_id",
+    val win = TimeSeries.slidingWindows(Tables.load(s, d, "events"), "user_id",
       Seq(col("ts"), col("event_id")),
       featureCols = Seq("value", "event_type"), labelCol = "value",
       lookBack = lookBack)
@@ -225,7 +222,7 @@ object StatsQueries {
   // ---- rolling / lag features (TS feature engineering) ----------------
   def rollingFeatures(s: SparkSession, d: String): DataFrame =
     graft.ts.RollingFeatures.features(
-      t(s, d, "events").filter(col("user_id") < 3)
+      Tables.load(s, d, "events").filter(col("user_id") < 3)
         .select(col("user_id"), col("event_id"), col("ts"),
           col("value")),
       "user_id", Seq(col("ts"), col("event_id")), "value",
@@ -246,7 +243,7 @@ object StatsQueries {
     * windowing (W2). Oracle = DuckDB generate_series + ASOF. */
   def resampleLocf(s: SparkSession, d: String): DataFrame =
     graft.ts.Resample.locf(
-      t(s, d, "events").filter(col("user_id") < 3)
+      Tables.load(s, d, "events").filter(col("user_id") < 3)
         .select(col("user_id"), unix_micros(col("ts")).as("us"),
           col("value")),
       "user_id", "us", "value", stepUs = 3600000000L)
@@ -274,7 +271,7 @@ object StatsQueries {
     * forward as-of join. */
   def resampleInterp(s: SparkSession, d: String): DataFrame =
     graft.ts.Resample.interpolate(
-      t(s, d, "events").filter(col("user_id") < 3)
+      Tables.load(s, d, "events").filter(col("user_id") < 3)
         .select(col("user_id"), unix_micros(col("ts")).as("us"),
           col("value")),
       "user_id", "us", "value", stepUs = 3600000000L)
@@ -314,7 +311,7 @@ object StatsQueries {
     * even this order-dependent op is hash-matched, not rows-only. */
   def ewmaSeries(s: SparkSession, d: String): DataFrame =
     graft.ts.RollingFeatures.ewma(
-      t(s, d, "events").filter(col("user_id") < 3)
+      Tables.load(s, d, "events").filter(col("user_id") < 3)
         .select(col("user_id"), col("event_id"), col("ts"), col("value")),
       "user_id", Seq(col("ts"), col("event_id")), "value",
       alpha = 0.3, idCol = "event_id")
@@ -338,7 +335,7 @@ object StatsQueries {
     * `1−α`/`1−β` weights are double subtractions in SQL too). */
   def holtSeries(s: SparkSession, d: String): DataFrame =
     graft.ts.RollingFeatures.holt(
-      t(s, d, "events").filter(col("user_id") < 3)
+      Tables.load(s, d, "events").filter(col("user_id") < 3)
         .select(col("user_id"), col("event_id"), col("ts"), col("value")),
       "user_id", Seq(col("ts"), col("event_id")), "value",
       alpha = 0.5, beta = 0.3, idCol = "event_id")
@@ -368,7 +365,7 @@ object StatsQueries {
   // ---- M1/M2: sklearn-exact scalers -----------------------------------
   def standardizeStats(s: SparkSession, d: String): DataFrame = {
     val cols = Seq("l_quantity", "l_discount")
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val scaled = Scalers.fitStandard(li, cols).transform(li)
     // `+ 0.0` canonicalizes IEEE -0.0 to 0.0 (the mean of a z-scored
     // column); the driver's byte-hash gate distinguishes signed zeros.
@@ -399,7 +396,7 @@ object StatsQueries {
       |FROM z""".stripMargin
 
   def minMaxStats(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
+    val li = Tables.load(s, d, "lineitem")
     val scaled = Scalers.fitMinMax(li, Seq("l_extendedprice")).transform(li)
     scaled.agg(
       round(avg(col("l_extendedprice")), 6).as("p_mean"),

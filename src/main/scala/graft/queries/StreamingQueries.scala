@@ -355,7 +355,6 @@ object StreamingQueries {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$d/events.parquet"),
         dir.resolve("events.parquet"))
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val sch = s.read.parquet(s"$d/events.parquet").schema
       val sentinelTsUs = maxUs + 1800000000L + 7200000000L + 3600000000L
       val vals: Array[Any] = sch.fields.map { f =>

@@ -372,29 +372,6 @@ object Dedup {
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** MLlib-native near-dup variant: shingles → binary CountVectorizer
-    * vectors → `MinHashLSH.approxSimilarityJoin`. Same candidate
-    * semantics as the custom pipeline (MinHash banding under the
-    * hood); the custom path is preferred when you need exact-Jaccard
-    * verification or control over banding, this one when you want the
-    * fitted-model persistence/Pipeline integration MLlib provides. */
-  def minHashNearDupsMLlib(docs: DataFrame, idCol: String, textCol: String,
-                           shingleK: Int = 3, maxJaccardDist: Double = 0.4,
-                           numHashTables: Int = 8): DataFrame = {
-    import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH}
-    val sh = docs.select(col(idCol), shingles(col(textCol), shingleK).as("sh"))
-      .filter(size(col("sh")) > 0)
-    val cv = new CountVectorizer().setInputCol("sh").setOutputCol("features")
-      .setBinary(true).fit(sh)
-    val vecs = cv.transform(sh)
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(42).fit(vecs)
-    lsh.approxSimilarityJoin(vecs, vecs, maxJaccardDist, "jaccard_dist")
-      .select(col(s"datasetA.$idCol").as("a"), col(s"datasetB.$idCol").as("b"),
-        round(lit(1.0) - col("jaccard_dist"), 6).as("jaccard"))
-      .filter(col("a") < col("b"))
-  }
-
   /** Codegen-friendly SimHash: explode tokens, one groupBy with 64
     * conditional-sum vote aggregates, reassemble the signature from
     * the vote signs. Produces bit-identical signatures to the

@@ -25,12 +25,4 @@ final class LruCache[K, V](val cap: Int) {
   def size: Int = m.synchronized(m.size())
 
   def contains(k: K): Boolean = m.synchronized(m.containsKey(k))
-
-  /** Keys least-recently-used first (snapshot). */
-  def keysLruFirst: Seq[K] = m.synchronized {
-    val it = m.keySet().iterator()
-    val b = Seq.newBuilder[K]
-    while (it.hasNext) b += it.next()
-    b.result()
-  }
 }

@@ -1832,7 +1832,7 @@ object Similarity {
     * no KMeans fit may run). `reuse` = expected query batches over
     * the index lifetime (1 = one-shot). The result carries the
     * routing decision + IVF params as `cos` metadata
-    * ([[knnRoutedOf]]/[[ivfParamsOf]]) so a consumer can PROVE which
+    * ([[knnRouteOf]]/[[ivfParamsOf]]) so a consumer can PROVE which
     * plan ran. */
   def knnAuto(emb: DataFrame, idCol: String, vecCol: String,
               queries: DataFrame, k: Int, reuse: Long = 1L,
@@ -1867,17 +1867,8 @@ object Similarity {
     val m = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong("ivf_nlist", p.nList.toLong)
       .putLong("ivf_nprobe", p.nProbe.toLong)
-      .putLong("knn_route", route.toLong)
-      .putBoolean("knn_ivf_routed", route != KnnRouteBrute).build()
+      .putLong("knn_route", route.toLong).build()
     res.withColumn("cos", col("cos").as("cos", m))
-  }
-
-  /** The routing decision recorded by [[knnAuto]] (true = any indexed
-    * tier), or None for frames from other entry points. */
-  def knnRoutedOf(df: DataFrame): Option[Boolean] = {
-    val m = df.schema(df.schema.fieldIndex("cos")).metadata
-    if (m.contains("knn_ivf_routed")) Some(m.getBoolean("knn_ivf_routed"))
-    else None
   }
 
   /** The three-way route code recorded by [[knnAuto]]
@@ -2396,18 +2387,6 @@ object Similarity {
       .select(col("id").as(idCol))
     emb.select(col(idCol)).join(dropped, Seq(idCol), "left_anti")
   }
-
-  /** Full SemDeDup: semantic pairs → connected components → keep the
-    * min-id representative of every duplicate group. Returns the ids
-    * that SURVIVE dedup (the training-set "keep" list). Exposes the
-    * same knobs as [[semDedupPairs]] so a production caller can run
-    * exactly the gate-certified configuration. */
-  def semDedup(emb: DataFrame, idCol: String, vecCol: String,
-               threshold: Double, nClusters: Int = 16,
-               assignProbes: Int = 2, seed: Long = 42L): DataFrame =
-    keepFromPairs(emb, idCol,
-      semDedupPairs(emb, idCol, vecCol, threshold, nClusters, assignProbes,
-        seed))
 
   /** INCREMENTAL SemDeDup — the daily-increment production path for
     * embedding dedup, composing the two existing primitives exactly

@@ -181,11 +181,4 @@ object TextAnalysis {
     * form — pass `tokens(lower(text))`, not the raw token column). */
   def fingerprintOf(toksLower: Column): Column =
     md5(array_join(array_sort(array_distinct(toksLower)), " "))
-
-  /** Rolling (shift-xor) hash over the token stream — order-sensitive
-    * (unlike `fingerprint`), overflow-free under ANSI mode (bitwise
-    * ops only). Spark-side only; no SQL oracle (xxhash64). */
-  def rollingHash(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (h, t) => shiftleft(h, 5).bitwiseXOR(shiftright(h, 27)).bitwiseXOR(xxhash64(t)))
 }

@@ -1,27 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Sink surface (S7-as-tables + the layouts a 100 TB deployment
-  * needs): plain, date/key-partitioned, and bucketed writers.
-  *
-  * Layout policy at scale:
-  *  - **Partition by** low-cardinality query-filter columns (date,
-  *    region): partition pruning turns full scans into directory
-  *    listings.
-  *  - **Bucket by** high-cardinality join keys (orderkey, user_id):
-  *    bucketed tables co-locate both join sides — the shuffle
-  *    disappears from every subsequent join on the key.
-  *  - Control file count explicitly (`repartition` before write):
-  *    small-file storms are the #1 operational failure of naive
-  *    partitioned writes.
+/** Parquet artifact maintenance: scan-sized memo writes and
+  * small-files compaction. Layout writers live with their operators:
+  * bucketed tables in [[Bucketing]], Z-order clustering in
+  * [[graft.operators.ZOrder]]; plain writes call `DataFrameWriter`
+  * directly.
   */
 object Sinks {
-
-  def writeParquet(df: DataFrame, path: String,
-                   mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).parquet(path)
 
   /** Index/memo artifact writer with scan-ready file sizing (guide
     * §6 + §2.5): a memo written with the build plan's natural
@@ -82,74 +69,6 @@ object Sinks {
     }
   }
 
-  /** Hive-style partitioned layout: `path/col=value/part-*.parquet`.
-    * `filesPerPartition` bounds output files via a pre-shuffle on the
-    * partition columns. */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-                       mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(mode)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
-  /** Bucketed managed table (bucket pruning + shuffle-free joins on
-    * the bucket key for any two tables bucketed the same way). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int,
-                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  def writeCsv(df: DataFrame, path: String,
-               mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).option("header", "true").csv(path)
-
-  /** ORC: the other columnar interchange format Spark ships natively
-    * (vectorized reader, predicate pushdown, column pruning — same
-    * scan discipline as parquet). */
-  def writeOrc(df: DataFrame, path: String,
-               mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).orc(path)
-
-  /** JSON-lines: the interchange format for event feeds; schema is
-    * carried by the reader (`spark.read.schema(...).json`) at scale —
-    * inference is a full extra pass. */
-  def writeJson(df: DataFrame, path: String,
-                mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).json(path)
-
-  /** Z-order clustering key over two columns: each column is
-    * quantized to a 16-bit rank against caller-supplied bounds, the
-    * bits interleaved (Morton order). Sorting by this key before
-    * writing gives every output file a bounded BOX in (c1, c2) space
-    * — so min/max footer stats prune files for predicates on EITHER
-    * column, where a plain sort only prunes its leading column. Pure
-    * bit arithmetic on codegen'd built-ins; no UDF. */
-  def zorderKey(c1: Column, c2: Column,
-                lo1: Double, hi1: Double,
-                lo2: Double, hi2: Double): Column = {
-    require(hi1 > lo1 && hi2 > lo2,
-      s"zorder bounds must be non-degenerate: [$lo1,$hi1] x [$lo2,$hi2]")
-    def quant(c: Column, lo: Double, hi: Double): Column =
-      least(greatest(
-        ((c.cast("double") - lit(lo)) / lit(hi - lo) * lit(65535.0))
-          .cast("long"), lit(0L)), lit(65535L))
-    // spread 16 bits to even positions (classic Morton spreading)
-    def spread(c: Column): Column = {
-      var x = c
-      x = x.bitwiseOR(shiftleft(x, 8)).bitwiseAND(lit(0x00FF00FFL))
-      x = x.bitwiseOR(shiftleft(x, 4)).bitwiseAND(lit(0x0F0F0F0FL))
-      x = x.bitwiseOR(shiftleft(x, 2)).bitwiseAND(lit(0x33333333L))
-      x = x.bitwiseOR(shiftleft(x, 1)).bitwiseAND(lit(0x55555555L))
-      x
-    }
-    spread(quant(c1, lo1, hi1))
-      .bitwiseOR(shiftleft(spread(quant(c2, lo2, hi2)), 1))
-  }
-
   /** Small-files compaction — the table-maintenance op every
     * streaming/incremental sink eventually needs: rewrite a parquet
     * directory into ~targetBytes files. Uses the scan's own size
@@ -207,16 +126,4 @@ object Sinks {
       require(fs.rename(old, hp), s"recovery rename $old -> $path failed")
     if (fs.exists(tmp)) require(fs.delete(tmp, true), s"cannot clear $tmp")
   }
-
-  /** Write parquet range-partitioned + sorted by the Z-order key of
-    * (c1, c2) — `repartitionByRange` gives disjoint key ranges per
-    * file, i.e. disjoint spatial boxes. */
-  def writeZOrdered(df: DataFrame, path: String, c1: String, c2: String,
-                    lo1: Double, hi1: Double, lo2: Double, hi2: Double,
-                    numFiles: Int, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.withColumn("_z", zorderKey(col(c1), col(c2), lo1, hi1, lo2, hi2))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode(mode).parquet(path)
 }

@@ -20,15 +20,15 @@ object Tables {
   /** Lazy parquet scan; Catalyst pushes filters/column pruning into it.
     *
     * `events.ts` is TIMESTAMP(NANOS) in the parquet footer, which
-    * Spark 4 rejects by default ([PARQUET_TYPE_ILLEGAL]). We read
-    * nanos as a long and rebuild a microsecond TimestampType column
-    * with integer division (`DIV` — ns-since-epoch ~1.7e18 overflows
+    * Spark 4 rejects by default ([PARQUET_TYPE_ILLEGAL]). A session
+    * built by [[graft.Sessions.local]] reads such columns as nanos in
+    * a long; we rebuild a microsecond TimestampType column with
+    * integer division (`DIV` — ns-since-epoch ~1.7e18 overflows
     * a double, so `/ 1000.0` would silently lose precision). The
     * result is exactly DuckDB's `CAST(ts AS TIMESTAMP)` truncation,
     * which every oracle mirrors.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) => // TIMESTAMP(NANOS) read as ns-since-epoch

@@ -24,7 +24,6 @@ object EventsStream {
     * parent with a `pathGlobFilter`, so the same table location works
     * for both the batch and streaming halves of a pipeline. */
   def readEvents(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(path).schema
     // resolve through the Hadoop FileSystem API so the single-file →
     // parent + pathGlobFilter rewrite applies on ANY filesystem the
@@ -151,105 +150,6 @@ object EventsStream {
         TimeMode.None(), OutputMode.Append())
   }
 
-  /** [[SessionProcessor]] + TIMER-BASED EVICTION — the state-TTL
-    * path a 100 TB stream needs: without it, every user who goes
-    * quiet leaves an open session pinned in the state store FOREVER
-    * (state grows with lifetime-distinct keys, not active ones).
-    * Each input batch slides a processing-time timer `evictMs` out;
-    * when it fires with no intervening activity the open session is
-    * EMITTED (not dropped — its events were real) and the key's
-    * state cleared, so steady-state store size tracks ACTIVE users.
-    * Timer discipline: exactly one live timer per key (the previous
-    * expiry is tracked in a second ValueState and deleted on every
-    * slide — stale timers would otherwise fire mid-activity and
-    * split sessions early). With eviction quiesced (no timer fires
-    * before end-of-input) output equals [[SessionProcessor]]'s; with
-    * eviction DRAINED (a final quiet period) closed + evicted equals
-    * the batch gap-sessionization total exactly — StreamingSpec pins
-    * both. */
-  class SessionTimerProcessor(gapUs: Long, evictMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long), (Long, Long)] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TTLConfig, TimeMode, TimerValues, ValueState}
-    @transient private var sess: ValueState[(Long, Long)] = _
-    @transient private var tmr: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      sess = getHandle.getValueState[(Long, Long)]("sess",
-        org.apache.spark.sql.Encoders.product[(Long, Long)], TTLConfig.NONE)
-      tmr = getHandle.getValueState[Long]("tmr",
-        org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(user: Long, rows: Iterator[(Long, Long)],
-        timerValues: TimerValues): Iterator[(Long, Long)] = {
-      val sorted = rows.map(_._2).toArray.sorted
-      var (lastUs, n) = if (sess.exists()) sess.get() else (Long.MinValue, 0L)
-      val closed = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      sorted.foreach { us =>
-        if (lastUs != Long.MinValue && us - lastUs >= gapUs) {
-          closed += ((user, n)); n = 0L
-        }
-        n += 1; lastUs = us
-      }
-      sess.update((lastUs, n))
-      // slide the eviction timer: delete the old one first so at most
-      // one timer is ever live per key
-      if (tmr.exists()) getHandle.deleteTimer(tmr.get())
-      val expiry = timerValues.getCurrentProcessingTimeInMs() + evictMs
-      getHandle.registerTimer(expiry)
-      tmr.update(expiry)
-      closed.iterator
-    }
-
-    override def handleExpiredTimer(user: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[(Long, Long)] = {
-      val out =
-        if (sess.exists()) {
-          val n = sess.get()._2
-          sess.clear()
-          Iterator.single((user, n))
-        } else Iterator.empty
-      tmr.clear()
-      out
-    }
-  }
-
-  /** [[twsSessions]] with timer eviction ([[SessionTimerProcessor]]).
-    * Same RocksDB-provider requirement; `TimeMode.ProcessingTime`
-    * because eviction is a wall-clock TTL decision. */
-  def twsSessionsEvicting(events: DataFrame, evictMs: Long)
-      : org.apache.spark.sql.Dataset[(Long, Long)] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    events
-      .select(col("user_id").cast("long"), unix_micros(col("ts")).as("us"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new SessionTimerProcessor(1800000000L, evictMs),
-        TimeMode.ProcessingTime(), OutputMode.Append())
-  }
-
-  /** EVENT-TIME session closing — the replayable-stream twin of
-    * [[SessionTimerProcessor]] (r12 verdict #6): a processing-time
-    * TTL depends on wall-clock arrival, so a replay of the same
-    * stream can split sessions differently; the scale-correct
-    * semantics keys the close decision to the WATERMARK. Protocol:
-    * input events buffer in a per-key `ListState`, and ONE event-time
-    * timer per key slides to (max event time + gap). Two emission
-    * paths keep that buffer bounded to the UNDECIDED tail (r13
-    * ADVICE — the sliding timer alone never fires for a continuously
-    * active key): (a) on every input batch, prefix sessions whose
-    * close is already watermark-proven (an in-buffer gap boundary
-    * follows them AND watermark ≥ session end + gap) emit immediately
-    * and leave state; (b) when the watermark passes the sliding
-    * expiry, no future row can land within the gap of the buffered
-    * maximum, so the whole remaining buffer is decidable: sort,
-    * gap-split, emit, clear. Because the close condition is a pure
-    * event-time fact, the drained output equals the batch
-    * gap-sessionization EXACTLY for any within-watermark disorder —
-    * the processing-time variant can only promise that when no timer
-    * fires mid-activity. */
   /** Test-only instrumentation for [[SessionEventTimeProcessor]]
     * (r14 verdict #4): when `instrument` is on, every input batch
     * records the per-key buffered-tail size AFTER prefix trimming
@@ -264,6 +164,24 @@ object EventsStream {
         (a, b) => math.max(a, b), 0L)
   }
 
+  /** EVENT-TIME session closing — [[SessionProcessor]] with bounded
+    * state: a processing-time TTL would depend on wall-clock arrival,
+    * so a replay of the same stream could split sessions differently;
+    * the scale-correct semantics keys the close decision to the
+    * WATERMARK. Protocol:
+    * input events buffer in a per-key `ListState`, and ONE event-time
+    * timer per key slides to (max event time + gap). Two emission
+    * paths keep that buffer bounded to the UNDECIDED tail (r13
+    * ADVICE — the sliding timer alone never fires for a continuously
+    * active key): (a) on every input batch, prefix sessions whose
+    * close is already watermark-proven (an in-buffer gap boundary
+    * follows them AND watermark ≥ session end + gap) emit immediately
+    * and leave state; (b) when the watermark passes the sliding
+    * expiry, no future row can land within the gap of the buffered
+    * maximum, so the whole remaining buffer is decidable: sort,
+    * gap-split, emit, clear. Because the close condition is a pure
+    * event-time fact, the drained output equals the batch
+    * gap-sessionization EXACTLY for any within-watermark disorder. */
   class SessionEventTimeProcessor(gapUs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, (Long, Long), (Long, Long)] {

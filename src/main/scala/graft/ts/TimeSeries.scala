@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** W1-W3 — grouped time-series split and sliding-window featurizer
-  * (SURVEY.md §2.5; reference auto_machine_learning.py:109-138).
+/** W1-W2 — grouped time-series split and sliding-window featurizer
+  * (SURVEY.md §2.5; reference auto_machine_learning.py:109-138). The
+  * W3 look-back sweep runs inside `AutoML.trainTimeSeries`.
   *
   * The reference slices by *physical row position* (`iloc`); here
   * every operator takes explicit order columns (SURVEY.md §8.1).
@@ -70,12 +71,4 @@ object TimeSeries {
       s"transform(window, r -> array(${featureCols.map(f => s"CAST(r.$f AS DOUBLE)").mkString(",")}))"))
     windowed.withColumn("features_flat", flat)
   }
-
-  /** W3 — look-back sweep: rebuild the windowed dataset per value
-    * (reference look_backs = [2,3,4], auto_machine_learning.py:104). */
-  def lookBackSweep(df: DataFrame, groupCol: String, orderCols: Seq[Column],
-                    featureCols: Seq[String], labelCol: String,
-                    lookBacks: Seq[Int] = Seq(2, 3, 4)): Map[Int, DataFrame] =
-    lookBacks.map(lb => lb ->
-      slidingWindows(df, groupCol, orderCols, featureCols, labelCol, lb)).toMap
 }

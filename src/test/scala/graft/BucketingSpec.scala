@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class BucketingSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = {
-    // own session: needs a writable warehouse for saveAsTable and
+    // own session, not Sessions.local: needs a writable warehouse
+    // (a static conf) for saveAsTable and
     // broadcast disabled so small test tables exercise the
     // sort-merge-join path the bucketing optimizes
     SparkSession.clearActiveSession()

@@ -159,17 +159,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs.head.getDouble(2) > 0.6)
   }
 
-  test("MLlib MinHashLSH finds the same near-dup pair as the custom pipeline") {
-    val base = (1 to 30).map(i => s"tok$i").mkString(" ")
-    val nearDup = (1 to 28).map(i => s"tok$i").mkString(" ") + " other1 other2"
-    val distinct = (100 to 130).map(i => s"zzz$i").mkString(" ")
-    val df = Seq((1L, base), (2L, nearDup), (3L, distinct)).toDF("doc_id", "text")
-    val got = Dedup.minHashNearDupsMLlib(df, "doc_id", "text")
-      .filter(col("jaccard") >= 0.6)
-      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 2L)))
-  }
-
   test("incremental jaccard = full pair set restricted to batch-touching pairs") {
     val docs = graft.sources.Tables.load(spark, sf, "documents")
     val full = Dedup.exactJaccardPairs(docs, "doc_id", "text", 2, 0.5)

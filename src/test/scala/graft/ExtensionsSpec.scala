@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExtensionsSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = {
+    // Own builder, not Sessions.local: extensions are a static conf.
     // getOrCreate returns an existing session and ignores extensions —
     // clear the handles so this suite always builds its own (the
     // underlying SparkContext is still shared, so this is cheap).
@@ -19,6 +20,8 @@ class ExtensionsSpec extends AnyFunSuite {
       .appName("graft-ext-spec")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
+      // Tables.registerAll loads events (TIMESTAMP(NANOS) ts)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
   }

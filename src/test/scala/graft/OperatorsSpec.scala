@@ -113,17 +113,6 @@ class OperatorsSpec extends SparkSpec {
     assert(salted == plain)
   }
 
-  test("salted join equals plain join") {
-    val big = Seq((1, "a"), (1, "b"), (2, "c"), (3, "d")).toDF("k", "v")
-    val small = Seq((1, 10.0), (2, 20.0)).toDF("k", "w")
-    val salted = Salting.saltedJoin(big, small, "k", saltBuckets = 4)
-      .select("k", "v", "w").collect().map(_.toSeq).toSet
-    val plain = big.join(small, "k")
-      .select("k", "v", "w").collect().map(_.toSeq).toSet
-    assert(salted == plain)
-    assert(salted.size == 3) // k=3 has no match
-  }
-
   test("connected components: chains, self-loops, isolated pairs") {
     // 1-2-3-4 chain (diameter 3), 10-11 pair, 20-20 self loop —
     // asserted on BOTH execution paths: the small-graph driver
@@ -319,7 +308,8 @@ class OperatorsSpec extends SparkSpec {
     // recompute z on the clustered output (projection keeps layout)
     val grid = (for (x <- 0 until 32; y <- 0 until 32) yield (x.toLong, y.toLong))
       .toDF("x", "y")
-    val clustered = graft.operators.ZOrder.clusterBy(grid, "x", "y", 8)
+    val clustered = graft.operators.ZOrder.clusterBy(grid,
+      graft.operators.ZOrder.zValue(col("x"), col("y")), 8)
     assert(clustered.columns.toSeq == Seq("x", "y"))
     val parts = clustered
       .select(graft.operators.ZOrder.zValue(col("x"), col("y")).as("z")).rdd
@@ -341,7 +331,8 @@ class OperatorsSpec extends SparkSpec {
     assert(spans.forall(_ <= 16), s"x spans not tight: ${spans.mkString(",")}")
     // a pre-existing column with a z-ish name passes through untouched
     val withZ = grid.withColumn("_z", lit(7L))
-    assert(graft.operators.ZOrder.clusterBy(withZ, "x", "y", 4)
+    assert(graft.operators.ZOrder.clusterBy(withZ,
+      graft.operators.ZOrder.zValue(col("x"), col("y")), 4)
       .filter(col("_z") =!= 7L).count() == 0)
   }
 }

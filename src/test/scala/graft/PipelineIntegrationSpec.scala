@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.ZOrder
 import graft.scaleops.TextAnalysis
 import graft.sources.Sinks
 import graft.stats.Expectations
@@ -39,9 +40,9 @@ class PipelineIntegrationSpec extends SparkSpec {
     try {
       val dir = root.toString + "/docs"
       val stats = kept.agg(min("n_chars"), max("n_chars")).head()
-      Sinks.writeZOrdered(kept, dir, "n_chars", "quality",
-        stats.getLong(0).toDouble, stats.getLong(1).toDouble, 0.0, 1.0,
-        numFiles = 8)
+      ZOrder.clusterBy(kept, ZOrder.zorderKey(col("n_chars"), col("quality"),
+        stats.getLong(0).toDouble, stats.getLong(1).toDouble, 0.0, 1.0), 8)
+        .write.parquet(dir)
       Sinks.compact(spark, dir, targetBytes = 512L << 20)
 
       // 4. Read back: row count survives both rewrites; the filter is

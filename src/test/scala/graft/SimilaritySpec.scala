@@ -459,8 +459,8 @@ class SimilaritySpec extends SparkSpec {
     val one = Similarity.knnAuto(emb, "vec_id", "embedding", q, 3, reuse = 1L)
     val many = Similarity.knnAuto(emb, "vec_id", "embedding", q, 3,
       reuse = 100L)
-    assert(Similarity.knnRoutedOf(one).contains(false))
-    assert(Similarity.knnRoutedOf(many).contains(true))
+    assert(Similarity.knnRouteOf(one).contains(KnnRouteBrute))
+    assert(Similarity.knnRouteOf(many).exists(_ != KnnRouteBrute))
     val brute = Similarity.knnBrute(emb, "vec_id", "embedding", q, 3)
     assert(one.exceptAll(brute).isEmpty && brute.exceptAll(one).isEmpty)
     val common = many.select("query_id", "neighbor_id")
@@ -717,14 +717,13 @@ class SimilaritySpec extends SparkSpec {
       (10L, v(0.01, 1, 0, 0)), (11L, v(0.02, 1, 0, 0)),
       (20L, v(0, 0, 1, 0)), (30L, v(0, 0, 0, 1)))
       .toDF("vec_id", "embedding")
-    val kept = Similarity.semDedup(emb, "vec_id", "embedding",
+    val pairs = Similarity.semDedupPairs(emb, "vec_id", "embedding",
       threshold = 0.95, nClusters = 2, seed = 42L)
+    val kept = Similarity.keepFromPairs(emb, "vec_id", pairs)
       .collect().map(_.getLong(0)).toSet
     // min-id survivor per group; isolated vectors always survive
     assert(kept == Set(1L, 10L, 20L, 30L))
     // pairs are exact-scored: every returned cos is the true cosine
-    val pairs = Similarity.semDedupPairs(emb, "vec_id", "embedding",
-      threshold = 0.95, nClusters = 2, seed = 42L)
     val exact = Similarity.nearDupPairs(emb, "vec_id", "embedding",
       threshold = 0.95)
     assert(pairs.join(exact, Seq("a", "b", "cos"), "left_anti").count() == 0)

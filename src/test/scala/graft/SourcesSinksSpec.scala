@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.ZOrder
 import graft.sources.{Sinks, Tables}
 
 class SourcesSinksSpec extends SparkSpec {
@@ -21,53 +22,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(df.schema("sensor").dataType.typeName == "double")
     val cycles = df.orderBy("_row_id").select("cycle").collect().map(_.getInt(0))
     assert(cycles.toSeq == (1 to 50)) // ascending _row_id == file order
-  }
-
-  test("partitioned writer prunes partitions on read") {
-    val dir = tmp() + "/part"
-    val ev = Tables.load(spark, sf, "events")
-      .withColumn("day", to_date(col("ts")))
-    Sinks.writePartitioned(ev, dir, Seq("event_type"))
-    val back = spark.read.parquet(dir)
-    assert(back.count() == ev.count())
-    val pruned = back.filter(col("event_type") === "click")
-    val planStr = pruned.queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters: [isnotnull(event_type"),
-      s"no partition pruning in:\n$planStr")
-    assert(pruned.count() ==
-      ev.filter(col("event_type") === "click").count())
-  }
-
-  test("bucketed table joins without an exchange on the bucket key") {
-    // managed tables land in ./spark-warehouse (static conf; gitignored)
-    Seq("orders_b", "lineitem_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(loc)
-    }
-    val orders = Tables.load(spark, sf, "orders")
-      .select("o_orderkey", "o_totalprice")
-    Sinks.writeBucketed(orders, "orders_b", "o_orderkey", 4)
-    val li = Tables.load(spark, sf, "lineitem")
-      .select("l_orderkey", "l_quantity")
-    Sinks.writeBucketed(li.withColumnRenamed("l_orderkey", "o_orderkey"),
-      "lineitem_b", "o_orderkey", 4)
-
-    // force a sort-merge join (broadcast would sidestep bucketing)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("lineitem_b")
-        .join(spark.table("orders_b"), "o_orderkey")
-      val shuffles = joined.queryExecution.executedPlan.toString
-        .linesIterator.count(_.contains("Exchange hashpartitioning"))
-      assert(shuffles == 0, "bucketed join must not shuffle")
-      assert(joined.count() > 0)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS orders_b")
-      spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    }
   }
 
   test("S2: xlsx round-trip with inference, shared/inline strings, blanks") {
@@ -140,37 +94,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(rows(1).getLong(n - 1) == ((n - 1) * 10).toLong)
   }
 
-  test("csv sink round-trips") {
-    val dir = tmp() + "/csv"
-    val df = Seq((1, "a"), (2, "b")).toDF("k", "v")
-    Sinks.writeCsv(df, dir)
-    val back = spark.read.option("header", "true")
-      .option("inferSchema", "true").csv(dir)
-    assert(back.collect().map(_.toSeq).toSet == df.collect().map(_.toSeq).toSet)
-  }
-
-  test("orc sink round-trips with pushdown-capable scan") {
-    val dir = tmp() + "/orc"
-    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "c", 3.5))
-      .toDF("k", "v", "x")
-    Sinks.writeOrc(df, dir)
-    val back = spark.read.orc(dir).filter($"k" > 1)
-    val scan = back.queryExecution.executedPlan.toString
-    assert(scan.contains("PushedFilters") && scan.contains("GreaterThan(k,1)"),
-      s"ORC scan must push the filter down:\n$scan")
-    assert(back.count() == 2)
-    assert(spark.read.orc(dir).schema.map(f => (f.name, f.dataType)) ==
-      df.schema.map(f => (f.name, f.dataType)))
-  }
-
-  test("json-lines sink round-trips under an explicit schema") {
-    val dir = tmp() + "/json"
-    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "v", "x")
-    Sinks.writeJson(df, dir)
-    val back = spark.read.schema(df.schema).json(dir)
-    assert(back.collect().map(_.toSeq).toSet == df.collect().map(_.toSeq).toSet)
-  }
-
   test("compaction folds many small files into few; data survives intact") {
     val dir = tmp() + "/compact"
     val df = (1 to 5000).map(i => (i.toLong, s"row$i")).toDF("k", "v")
@@ -212,7 +135,7 @@ class SourcesSinksSpec extends SparkSpec {
     // 64x64 grid; Morton order must map equal keys only for equal cells
     val grid = for { x <- 0 until 64; y <- 0 until 64 } yield (x.toDouble, y.toDouble)
     val df = grid.toDF("x", "y")
-      .withColumn("z", Sinks.zorderKey(col("x"), col("y"), 0, 63, 0, 63))
+      .withColumn("z", ZOrder.zorderKey(col("x"), col("y"), 0, 63, 0, 63))
     assert(df.select("z").distinct().count() == 64L * 64)
     // quadrant property: the top bit pair splits the plane into 4 boxes
     val q = df.withColumn("quad", (col("z") / lit(1L << 30)).cast("int"))
@@ -235,8 +158,9 @@ class SourcesSinksSpec extends SparkSpec {
     val pts = (0 until n).map { i =>
       (((i * 2654435761L) % 256).toDouble, ((i * 40503L) % 256).toDouble)
     }
-    Sinks.writeZOrdered(pts.toDF("x", "y"), dir, "x", "y",
-      0, 255, 0, 255, numFiles = 16)
+    ZOrder.clusterBy(pts.toDF("x", "y"),
+      ZOrder.zorderKey(col("x"), col("y"), 0, 255, 0, 255), 16)
+      .write.parquet(dir)
     val boxes = spark.read.parquet(dir)
       .withColumn("file", input_file_name())
       .groupBy("file")

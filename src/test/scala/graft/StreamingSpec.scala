@@ -201,67 +201,6 @@ class StreamingSpec extends SparkSpec {
     assert(tws.nonEmpty && tws == fmgws)
   }
 
-  test("timer-evicting tws sessions DRAIN the state: closed + evicted " +
-    "equals the batch gap-sessionization total, events conserved") {
-    import org.apache.spark.sql.functions._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // NOTE: with TimeMode.ProcessingTime the engine keeps running
-      // micro-batches while timers are pending, so
-      // processAllAvailable() never latches — poll the sink against
-      // a deadline instead (the timers fire on their own)
-      // evictMs must comfortably exceed any plausible inter-micro-batch
-      // stall on a loaded CI box: a timer that fires while a key still
-      // has events in flight splits that session and the strict
-      // equality below fails flakily (r12 ADVICE). 15 s >> the
-      // 250 ms trigger; the poll loop below exits as soon as the last
-      // timers fire, so the test only pays ~evictMs once.
-      val q = EventsStream.twsSessionsEvicting(
-        EventsStream.readEvents(spark, streamDir), evictMs = 15000L)
-        .toDF("user_id", "sess_events")
-        .writeStream.format("memory").queryName("tws_evict_out")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime("250 milliseconds"))
-        .start()
-      val sess = Events.sessionize(spark, sf)
-      val batchTotal = sess.agg(sum("n_sessions")).head().getLong(0)
-      val deadline = System.currentTimeMillis() + 120000L
-      var drained = spark.table("tws_evict_out").count()
-      while (drained < batchTotal && System.currentTimeMillis() < deadline) {
-        Thread.sleep(500L)
-        drained = spark.table("tws_evict_out").count()
-      }
-      q.stop()
-      // drained: the gap-closed sessions arrived with the data; every
-      // user's final open session was EMITTED by its eviction timer
-      // and the state cleared — closed + evicted equals the batch
-      // total exactly, nothing dangles (the 100 TB TTL claim) and
-      // nothing double-fires (strict equality, not >=)
-      val out = spark.table("tws_evict_out")
-      assert(out.count() == batchTotal,
-        s"drained=${out.count()}, want $batchTotal")
-      // event conservation: every event landed in exactly one session
-      val nEvents = graft.sources.Tables.load(spark, sf, "events").count()
-      assert(out.agg(sum("sess_events")).head().getLong(0) == nEvents)
-      // per-user session counts equal the batch sessionization's
-      val streamedPerUser = out.groupBy("user_id")
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val batchPerUser = sess.select("user_id", "n_sessions").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(streamedPerUser == batchPerUser)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("EVENT-TIME session timers: drained output equals the batch " +
     "gap-sessionization EXACTLY on an out-of-order multi-file fixture " +
     "(replayable semantics — no wall-clock in the close decision)") {

@@ -24,13 +24,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(fps(0) != fps(2))
   }
 
-  test("rolling hash is order-sensitive (unlike fingerprint)") {
-    val df = Seq("a b c", "c b a").toDF("text")
-      .select(TextAnalysis.rollingHash(col("text")).as("h"))
-    val hs = df.collect().map(_.getLong(0))
-    assert(hs(0) != hs(1))
-  }
-
   test("langid picks the language with most marker hits; en on ties") {
     val df = Seq(
       "der hund und die katze",   // de markers

@@ -41,14 +41,6 @@ class TimeSeriesSpec extends SparkSpec {
     assert(train + test == 10 + 2)
   }
 
-  test("W3 sweep builds one dataset per look_back") {
-    val sweep = TimeSeries.lookBackSweep(series(), "g", Seq(col("ord")),
-      Seq("v"), "v")
-    assert(sweep.keySet == Set(2, 3, 4))
-    assert(sweep(2).filter(col("g") === 1).count() == 8)
-    assert(sweep(4).filter(col("g") === 1).count() == 6)
-  }
-
   test("ewma: recurrence matches hand computation; groups independent") {
     val df = (Seq((1L, 1, 10.0), (1L, 2, 20.0), (1L, 3, 30.0),
       (2L, 1, 100.0), (2L, 2, 0.0)))
